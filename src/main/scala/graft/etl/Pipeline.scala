@@ -2,7 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.Scd
+import graft.ops.{Derive, Scd}
 import graft.sources.Warehouse
 
 /** The reference's full daily refresh as one orchestrated run
@@ -79,7 +79,7 @@ object Pipeline {
   /** One daily refresh: staging → ODS SCD merges → DW build. */
   def runDaily(spark: SparkSession, wh: Warehouse, raw: Inputs,
       asOf: String): Unit = {
-    val asOfD = lit(java.sql.Date.valueOf(asOf))
+    val asOfD = Derive.asOfDay(asOf)
 
     // ---- E1: staging + SCD merges into the ODS zone ----
     val stagedCust = BikesPipeline.stageCustomer(raw.customer, asOfD)
@@ -216,7 +216,7 @@ object Pipeline {
   def runDailyCat(spark: SparkSession, wh: Warehouse, raw: Inputs,
       asOf: String, retries: Int = 8,
       beforeCommit: () => Unit = () => ()): (Int, Map[String, Int]) = {
-    val asOfD = lit(java.sql.Date.valueOf(asOf))
+    val asOfD = Derive.asOfDay(asOf)
     val base = wh.catSnapshot() // the one consistent read base
     def prior(n: String): Option[DataFrame] =
       base.get(n).map(v => wh.casReadAt(spark, n, v))

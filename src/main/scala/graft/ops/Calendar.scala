@@ -17,7 +17,7 @@ object Calendar {
     val startD = java.time.LocalDate.parse(start)
     val endD = java.time.LocalDate.parse(end)
     val nDays = java.time.temporal.ChronoUnit.DAYS.between(startD, endD) + 1
-    val asOfCol = lit(java.sql.Date.valueOf(asOf))
+    val asOfCol = Derive.asOfDay(asOf)
     val d = col("date_val")
     spark.range(nDays)
       .select(date_add(lit(java.sql.Date.valueOf(start)),

@@ -10,6 +10,30 @@ import org.apache.spark.sql.functions._
   */
 object Derive {
 
+  /** The as-of day as a column the optimizer cannot fold. Spark inlines
+    * a date literal into the generated Java, so a plan built for a new
+    * day compiles new classes; a zero-argument UDF reaches the code
+    * through the references array instead, and one day's generated code
+    * is identical to the next day's (and served from the codegen cache).
+    * `lit`, `typedLit` and a cast of a string are all folded back into a
+    * literal. No plan filters on the as-of value, so no pushdown is lost;
+    * non-nullable like the literal it replaces, so schemas are unchanged.
+    */
+  def asOfDay(day: String): Column =
+    udf(new Day(java.sql.Date.valueOf(day))).asNonNullable()
+      .withName("as_of")()
+
+  /** The function behind [[asOfDay]]. Days compare by value but all hash
+    * alike: codegen numbers common subexpressions in hash order, and a
+    * lambda's identity hash would reorder them (and so change the code)
+    * from one day to the next.
+    */
+  private final case class Day(d: java.sql.Date)
+      extends (() => java.sql.Date) {
+    def apply(): java.sql.Date = d
+    override def hashCode: Int = classOf[Day].getName.hashCode
+  }
+
   /** Exact floor-age with the birthday-not-yet-reached correction.
     * Reference: tuple-compare UDF (ETLScript_withSCDimplementation.py:31-37).
     * Expressed as `(m*100+d)` scalar compare — pure codegen, no UDF.

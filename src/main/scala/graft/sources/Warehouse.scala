@@ -895,11 +895,16 @@ final case class Warehouse(root: String,
   private def journalFile(table: String): File =
     new File(new File(dir(table + "__clustered")), "journal.txt")
 
+  /** A missing file reads as empty — also one deleted between a caller's
+    * listing and this open (a concurrent [[casTruncate]]), which an
+    * exists-then-open check would let through as an exception.
+    */
   private def readLines(f: File): Seq[String] =
-    if (!f.exists()) Seq.empty
-    else {
+    try {
       val src = scala.io.Source.fromFile(f)
       try src.getLines().toList finally src.close()
+    } catch {
+      case _: java.io.FileNotFoundException if !f.exists() => Seq.empty
     }
 
   /** Atomic line-file write: content lands in a temp sibling first and
