@@ -1,7 +1,12 @@
 package graft.etl
 
+import java.util.concurrent.{CompletionException, ExecutorService, Executors}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.util.{Failure, Try}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import graft.ops.{Derive, Scd}
 import graft.sources.Warehouse
 
@@ -10,8 +15,10 @@ import graft.sources.Warehouse
   * E2: BikesDWSQl.sql, seven statements in order). Each step is a
   * DataFrame pipeline ending in a warehouse write; ordering matters
   * only for the self-referential reads (SCD targets, CDC facts read
-  * their own prior contents — E1 step 3 / DW:62,94), which
-  * `Warehouse.mergeOverwrite` makes safe.
+  * their own prior contents — E1 step 3 / DW:62,94) and for the DW
+  * builds reading the ODS zone. [[runDaily]] runs the steps in the
+  * reference's serial order; [[runDailyCat]] runs each zone's tables
+  * as one concurrent wave.
   */
 object Pipeline {
 
@@ -76,7 +83,13 @@ object Pipeline {
     }
   }
 
-  /** One daily refresh: staging → ODS SCD merges → DW build. */
+  /** One daily refresh: staging → ODS SCD merges → DW build, one
+    * table after another. It stays serial because its writes are
+    * single-writer devices: [[Warehouse.mergeOverwrite]]'s
+    * `.tmp`/`.old` swap journal and the plain `overwrite`/`append`
+    * paths assume no other writer, so only the CAS-logged
+    * [[runDailyCat]] publishes concurrently.
+    */
   def runDaily(spark: SparkSession, wh: Warehouse, raw: Inputs,
       asOf: String): Unit = {
     val asOfD = Derive.asOfDay(asOf)
@@ -176,6 +189,49 @@ object Pipeline {
   /** The DW zone alone (E2's seven statements). */
   val dwTables: Seq[String] = allTables.filter(_.startsWith("dw_"))
 
+  /** Name prefix of the refresh pool's threads. */
+  private[graft] val refreshThreadPrefix = "graft-refresh-"
+
+  /** The pool [[runDailyCat]]'s waves run on: one per JVM, created on
+    * first use, daemon threads, as wide as the widest wave (the nine
+    * ODS publications), so a wave's tasks never queue behind each
+    * other. Concurrent refreshes share it and queue instead of adding
+    * threads.
+    */
+  private lazy val refreshPool: ExecutorService = {
+    val width = math.max(allTables.size - dwTables.size, dwTables.size)
+    val made = new AtomicInteger
+    Executors.newFixedThreadPool(width, (r: Runnable) => {
+      val t = new Thread(r, refreshThreadPrefix + made.incrementAndGet())
+      t.setDaemon(true)
+      t
+    })
+  }
+
+  /** Runs one wave of table publications concurrently and returns each
+    * table's CAS version. Each task runs with the caller's local
+    * properties and active session, captured at submission — not the
+    * ones a pooled thread inherited when it was created. The wave waits
+    * for EVERY task, failed or not, so no write lands after it returns
+    * or throws; it then rethrows the first failure in `tasks` order as
+    * the task threw it.
+    */
+  private def wave(spark: SparkSession,
+      tasks: Seq[(String, () => Int)]): Seq[(String, Int)] = {
+    val session =
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val running = tasks.map { case (name, publish) =>
+      name -> SQLExecution.withThreadLocalCaptured(session, refreshPool)(
+        publish())
+    }
+    val outcomes = running.map { case (name, f) => name -> Try(f.join()) }
+    outcomes.map { case (name, done) =>
+      name -> done.recoverWith {
+        case e: CompletionException => Failure(e.getCause)
+      }.get
+    }
+  }
+
   /** [[runDaily]] re-based onto the CATALOG tier: the ENTIRE daily
     * refresh — nine SCD merges and seven DW builds — publishes as ONE
     * cross-table catalog transaction, which is the reference's actual
@@ -201,6 +257,16 @@ object Pipeline {
     *     between (`beforeCommit` is the seam the mid-refresh-reader
     *     spec and q291 inject into).
     *
+    * The tables publish in two concurrent [[wave]]s: the nine ODS
+    * tables, then the seven DW builds. A table reads only its own raw
+    * extract, its own pinned prior and (DW) the ODS versions of the
+    * first wave, and writes only its own CAS log, so within a wave the
+    * order does not matter. A refresh is ~25 small SQL executions, so
+    * its time is fixed per-job cost; run one after another they left
+    * the session's cores idle most of the time. The pin list is built
+    * in [[allTables]] order, so the catalog commit and the returned
+    * versions do not depend on which task finished first.
+    *
     * A failure anywhere (e.g. the constraint gate) leaves the catalog
     * untouched: staged REPLACE commits without a pin are dead
     * versions the next successful refresh supersedes. Incremental
@@ -222,9 +288,8 @@ object Pipeline {
       base.get(n).map(v => wh.casReadAt(spark, n, v))
 
     // ---- E1: ODS SCD merges, each landing as an unpinned REPLACE --
-    val vs = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     def publishScd1(name: String, staged: DataFrame, keys: Seq[String],
-        attrs: Seq[String]): Unit = {
+        attrs: Seq[String]): Int = {
       val cached = staged.persist()
       try {
         Warehouse.checkConstraints(cached, name, keys)
@@ -232,16 +297,35 @@ object Pipeline {
           case Some(tgt) => Scd.scd1Merge(cached, tgt, keys, attrs)
           case None => cached
         }
-        vs(name) = wh.casOverwrite(merged, name, retries)
+        wh.casOverwrite(merged, name, retries)
       } finally {
         cached.unpersist()
         ()
       }
     }
-    publishScd1("ods_customer",
-      BikesPipeline.stageCustomer(raw.customer, asOfD),
-      Seq("customer_id"),
-      Seq("first_name", "last_name", "gender", "DOB", "Age", "Agerange"))
+    def publishProductHist(): Int = {
+      val stagedProd = BikesPipeline.stage(raw.product,
+        Seq("PRODUCTID", "PRODCATEGORYID", "PARTNERID", "PRICE"))
+        .persist()
+      try {
+        Warehouse.checkConstraints(stagedProd, "ods_product_hist",
+          Seq("PRODUCTID"))
+        val prodAttrs = Seq("PRODCATEGORYID", "PARTNERID", "PRICE")
+        val prodHist = prior("ods_product_hist") match {
+          case Some(h) =>
+            Scd.scd2Merge(stagedProd, h, Seq("PRODUCTID"), prodAttrs,
+              asOfD)
+          case None => stagedProd
+            .withColumn("current_flag", lit(1L))
+            .withColumn("eff_dt", asOfD)
+            .withColumn("exp_dt", lit(null).cast("date"))
+        }
+        wh.casOverwrite(prodHist, "ods_product_hist", retries)
+      } finally {
+        stagedProd.unpersist()
+        ()
+      }
+    }
     val rawByName: Map[String, DataFrame] = Map(
       "ods_address" -> raw.address,
       "ods_business_partner" -> raw.businessPartner,
@@ -250,41 +334,23 @@ object Pipeline {
       "ods_store" -> raw.store,
       "ods_sales_order" -> raw.salesOrder,
       "ods_sales_order_items" -> raw.salesOrderItems)
-    scd1Tables.foreach { case (name, keep, dateCols, keys, attrs) =>
-      publishScd1(name, BikesPipeline.stage(rawByName(name), keep,
-        dateCols), keys, attrs)
-    }
-
-    val stagedProd = BikesPipeline.stage(raw.product,
-      Seq("PRODUCTID", "PRODCATEGORYID", "PARTNERID", "PRICE"))
-      .persist()
-    try {
-      Warehouse.checkConstraints(stagedProd, "ods_product_hist",
-        Seq("PRODUCTID"))
-      val prodAttrs = Seq("PRODCATEGORYID", "PARTNERID", "PRICE")
-      val prodHist = prior("ods_product_hist") match {
-        case Some(h) =>
-          Scd.scd2Merge(stagedProd, h, Seq("PRODUCTID"), prodAttrs, asOfD)
-        case None => stagedProd
-          .withColumn("current_flag", lit(1L))
-          .withColumn("eff_dt", asOfD)
-          .withColumn("exp_dt", lit(null).cast("date"))
-      }
-      vs("ods_product_hist") =
-        wh.casOverwrite(prodHist, "ods_product_hist", retries)
-    } finally {
-      stagedProd.unpersist()
-      ()
-    }
+    val odsVs = wave(spark,
+      ("ods_customer" -> (() => publishScd1("ods_customer",
+        BikesPipeline.stageCustomer(raw.customer, asOfD),
+        Seq("customer_id"),
+        Seq("first_name", "last_name", "gender", "DOB", "Age",
+          "Agerange")))) +:
+      scd1Tables.map { case (name, keep, dateCols, keys, attrs) =>
+        name -> (() => publishScd1(name,
+          BikesPipeline.stage(rawByName(name), keep, dateCols), keys,
+          attrs))
+      } :+
+      ("ods_product_hist" -> (() => publishProductHist()))).toMap
 
     // ---- E2: DW builds over the JUST-COMMITTED ODS versions -------
-    def ods(n: String) = wh.casReadAt(spark, n, vs(n))
+    def ods(n: String) = wh.casReadAt(spark, n, odsVs(n))
     val items = ods("ods_sales_order_items")
     val orders = ods("ods_sales_order")
-
-    vs("dw_prdct_sm_fct") = wh.casOverwrite(
-      BikesPipeline.prdctSmFct(items, orders, asOfD),
-      "dw_prdct_sm_fct", retries)
 
     // incremental facts land O(delta), matching the reference's
     // INSERT-only fact loads (BikesDWSQl.sql:41 `insert into
@@ -300,58 +366,57 @@ object Pipeline {
     // between O(day) and O(history) daily writes; [[Warehouse
     // .casMaybeOptimize]] keeps the accumulated daily waves' read
     // fan-in bounded.
-    def publishFact(name: String, delta: DataFrame,
-        priorDf: Option[DataFrame]): Unit =
-      vs(name) = priorDf match {
+    // `grain`: the fact's key columns; the CDC build leaves the keys
+    // the pinned prior already holds out of the delta
+    def publishFact(name: String, grain: StructType,
+        build: DataFrame => DataFrame): Int = {
+      val priorDf = prior(name)
+      val delta = build(
+        priorDf.map(_.select(grain.fieldNames.toSeq.map(col): _*))
+          .getOrElse(spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], grain)))
+      priorDf match {
         case Some(_) if wh.casHead(name) == base(name) =>
           wh.casAppend(delta, name, retries)
         case Some(p) =>
           wh.casOverwrite(p.unionByName(delta), name, retries)
         case None => wh.casOverwrite(delta, name, retries)
       }
-
-    val smPrior = prior("dw_ordr_sm_fct")
-    val smExisting = smPrior.map(_.select("Ordr_ID")).getOrElse(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        new org.apache.spark.sql.types.StructType()
-          .add("Ordr_ID", org.apache.spark.sql.types.LongType)))
-    publishFact("dw_ordr_sm_fct",
-      BikesPipeline.ordrSmFct(items, orders, smExisting, asOfD),
-      smPrior)
-
-    val dtlPrior = prior("dw_ordr_dtl_fct")
-    val dtlExisting = dtlPrior.map(_.select("Ordr_ID", "Prdct_ID"))
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        new org.apache.spark.sql.types.StructType()
-          .add("Ordr_ID", org.apache.spark.sql.types.LongType)
-          .add("Prdct_ID", org.apache.spark.sql.types.StringType)))
-    publishFact("dw_ordr_dtl_fct",
-      BikesPipeline.ordrDtlFct(items, orders, dtlExisting, asOfD),
-      dtlPrior)
-
-    vs("dw_cust_dim") = wh.casOverwrite(
-      BikesPipeline.custDim(ods("ods_customer"), asOfD),
-      "dw_cust_dim", retries)
-    vs("dw_str_dim") = wh.casOverwrite(
-      BikesPipeline.strDim(ods("ods_store"), ods("ods_address"), asOfD),
-      "dw_str_dim", retries)
-    vs("dw_prdct_dim") = wh.casOverwrite(
-      BikesPipeline.prdctDim(ods("ods_product_hist"),
-        ods("ods_product_category"), ods("ods_product_detail"),
-        ods("ods_business_partner"), ods("ods_address"), asOfD),
-      "dw_prdct_dim", retries)
-    vs("dw_act_perd_dim") = wh.casOverwrite(
-      BikesPipeline.actPerdDim(spark, "2018-01-01", "2020-12-31", asOf),
-      "dw_act_perd_dim", retries)
+    }
+    val dwVs = wave(spark, Seq(
+      "dw_prdct_sm_fct" -> (() => wh.casOverwrite(
+        BikesPipeline.prdctSmFct(items, orders, asOfD),
+        "dw_prdct_sm_fct", retries)),
+      "dw_ordr_sm_fct" -> (() => publishFact("dw_ordr_sm_fct",
+        new StructType().add("Ordr_ID", LongType),
+        BikesPipeline.ordrSmFct(items, orders, _, asOfD))),
+      "dw_ordr_dtl_fct" -> (() => publishFact("dw_ordr_dtl_fct",
+        new StructType().add("Ordr_ID", LongType)
+          .add("Prdct_ID", StringType),
+        BikesPipeline.ordrDtlFct(items, orders, _, asOfD))),
+      "dw_cust_dim" -> (() => wh.casOverwrite(
+        BikesPipeline.custDim(ods("ods_customer"), asOfD),
+        "dw_cust_dim", retries)),
+      "dw_str_dim" -> (() => wh.casOverwrite(
+        BikesPipeline.strDim(ods("ods_store"), ods("ods_address"),
+          asOfD), "dw_str_dim", retries)),
+      "dw_prdct_dim" -> (() => wh.casOverwrite(
+        BikesPipeline.prdctDim(ods("ods_product_hist"),
+          ods("ods_product_category"), ods("ods_product_detail"),
+          ods("ods_business_partner"), ods("ods_address"), asOfD),
+        "dw_prdct_dim", retries)),
+      "dw_act_perd_dim" -> (() => wh.casOverwrite(
+        BikesPipeline.actPerdDim(spark, "2018-01-01", "2020-12-31",
+          asOf), "dw_act_perd_dim", retries)))).toMap
 
     // ---- the reference's line-202 `commit`: ONE pin set -----------
     // catCommitMax, not catCommit: the fact pins ADVANCE over
     // appended deltas, and the monotone merge means a concurrent
     // transaction's pins on the same tables can never be regressed
     // by this refresh (the q292 device)
+    val published = odsVs ++ dwVs
+    val vs = allTables.map(t => t -> published(t))
     beforeCommit()
-    (wh.catCommitMax(vs.toSeq, retries), vs.toMap)
+    (wh.catCommitMax(vs, retries), vs.toMap)
   }
 }

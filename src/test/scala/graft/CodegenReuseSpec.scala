@@ -82,7 +82,10 @@ class CodegenReuseSpec extends SparkSpec {
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
-      "spark.sql.codegen.cache.maxEntries" -> "10000"))
+      "spark.sql.codegen.cache.maxEntries" -> "10000",
+      "spark.sql.shuffleExchange.maxThreadThreshold" -> "16",
+      "spark.sql.resultQueryStage.maxThreadThreshold" -> "16",
+      "spark.sql.ui.retainedExecutions" -> "50"))
     // Spark's own entry: static, 100 by default, refused by a live session
     val entry = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES
     assert(entry.key == "spark.sql.codegen.cache.maxEntries")
