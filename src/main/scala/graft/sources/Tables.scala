@@ -13,9 +13,14 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Table `name` of `sfDir`. The inputs are immutable — a table
+    * changes only by a rewrite, which changes its file's identity — so
+    * the schema is inferred on the first read of a session and reused
+    * after it ([[SchemaMemo]]): a warm call starts no Spark job.
+    */
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") events(spark, sfDir)
-    else spark.read.parquet(s"$sfDir/$name.parquet")
+    else SchemaMemo.parquet(spark, Seq(s"$sfDir/$name.parquet"))
 
   /** `events.ts` has shipped as two different parquet encodings across
     * testdata generations: TIMESTAMP(NANOS) (which Spark's reader
@@ -25,11 +30,16 @@ object Tables {
     * (surfaced as TIMESTAMP_NTZ). Normalize both to session-TZ
     * TimestampType at microsecond grain so every downstream query sees
     * one type; the session TZ is pinned to UTC, so the NTZ cast is a
-    * pure re-tag of the same micros value.
+    * pure re-tag of the same micros value. The raw schema is memoized
+    * like [[apply]]'s, and the encoding is decided from it.
     */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    normalizeTs(SchemaMemo.parquet(spark, Seq(s"$sfDir/events.parquet")))
+  }
+
+  /** The `ts` normalization of [[events]] over a raw read. */
+  private[graft] def normalizeTs(raw: DataFrame): DataFrame = {
     val ts = raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         timestamp_micros(expr("ts div 1000"))

@@ -1662,20 +1662,22 @@ final case class Warehouse(root: String,
     *    Tombstones are forget-list grain (bounded, broadcast); a
     *    delete too large to broadcast belongs on the copy-on-write
     *    path ([[casDeleteWhere]]) or behind [[casCompactDeletes]].
+    *
+    * Every path a line names is a write-once UUID directory (a staged
+    * wave or tombstone, never rewritten in place), so both reads go
+    * through [[SchemaMemo]]: a snapshot's schema is inferred once per
+    * session, and a repeated read starts no footer-reading job.
     */
   private def casResolveRead(spark: SparkSession, cmds: Seq[String],
       ctx: String): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
     val (dels, datas) = cmds.partition(casIsDel)
     require(datas.nonEmpty, s"$ctx: empty snapshot under $root")
-    val reader =
-      if (datas.exists(casIsEvolved))
-        spark.read.option("mergeSchema", "true")
-      else spark.read
-    val base = reader.parquet(datas.map(casCmdPath): _*)
+    val base = SchemaMemo.parquet(spark, datas.map(casCmdPath),
+      mergeSchema = datas.exists(casIsEvolved))
     dels.groupBy(_.split(" ", 3)(1)).foldLeft(base) {
       case (df, (keyCol, lines)) =>
-        val tomb = spark.read.parquet(lines.map(casCmdPath): _*)
+        val tomb = SchemaMemo.parquet(spark, lines.map(casCmdPath))
           .select(col(keyCol)).distinct()
         df.join(broadcast(tomb), Seq(keyCol), "left_anti")
     }
