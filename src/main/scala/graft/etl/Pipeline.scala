@@ -261,15 +261,20 @@ object Pipeline {
     * tables, then the seven DW builds. A table reads only its own raw
     * extract, its own pinned prior and (DW) the ODS versions of the
     * first wave, and writes only its own CAS log, so within a wave the
-    * order does not matter. A refresh is ~25 small SQL executions, so
-    * its time is fixed per-job cost; run one after another they left
-    * the session's cores idle most of the time. The pin list is built
-    * in [[allTables]] order, so the catalog commit and the returned
-    * versions do not depend on which task finished first.
+    * order does not matter. A refresh is 16 small SQL executions, one
+    * write per table (each ODS table's constraint gate runs inside its
+    * write, [[Warehouse.constraintGate]]), so its time is fixed per-job
+    * cost; run one after another they left the session's cores idle
+    * most of the time. The pin list is built in [[allTables]] order,
+    * so the catalog commit and the returned versions do not depend on
+    * which task finished first.
     *
-    * A failure anywhere (e.g. the constraint gate) leaves the catalog
-    * untouched: staged REPLACE commits without a pin are dead
-    * versions the next successful refresh supersedes. Incremental
+    * A failure anywhere leaves the catalog untouched. A batch that
+    * fails its constraint gate commits nothing to its own log either
+    * (the gate is checked after the write, before the CAS, and the
+    * staged files are deleted); staged REPLACE commits of the other
+    * tables, without a pin, are dead versions the next successful
+    * refresh supersedes. Incremental
     * facts are O(delta): the CDC delta (computed against the pinned
     * prior) lands as ONE casAppend wave when the fact log is at its
     * pinned base — the reference's INSERT-only fact loads
@@ -288,43 +293,41 @@ object Pipeline {
       base.get(n).map(v => wh.casReadAt(spark, n, v))
 
     // ---- E1: ODS SCD merges, each landing as an unpinned REPLACE --
+    // the DDL constraint gate (Createtables_BIKES.sql PKs) runs inside
+    // each publication's write, and casOverwrite checks it before the
+    // CAS: one SQL execution per table, and a violating batch fails
+    // the refresh without moving the table's head
     def publishScd1(name: String, staged: DataFrame, keys: Seq[String],
         attrs: Seq[String]): Int = {
-      val cached = staged.persist()
-      try {
-        Warehouse.checkConstraints(cached, name, keys)
-        val merged = prior(name) match {
-          case Some(tgt) => Scd.scd1Merge(cached, tgt, keys, attrs)
-          case None => cached
-        }
-        wh.casOverwrite(merged, name, retries)
-      } finally {
-        cached.unpersist()
-        ()
+      val (gated, check) = Warehouse.constraintGate(staged, name, keys)
+      val merged = prior(name) match {
+        case Some(tgt) => Scd.scd1Merge(gated, tgt, keys, attrs)
+        case None => gated
       }
+      wh.casOverwrite(merged, name, retries, validate = check)
     }
     def publishProductHist(): Int = {
-      val stagedProd = BikesPipeline.stage(raw.product,
-        Seq("PRODUCTID", "PRODCATEGORYID", "PARTNERID", "PRICE"))
-        .persist()
-      try {
-        Warehouse.checkConstraints(stagedProd, "ods_product_hist",
-          Seq("PRODUCTID"))
-        val prodAttrs = Seq("PRODCATEGORYID", "PARTNERID", "PRICE")
-        val prodHist = prior("ods_product_hist") match {
-          case Some(h) =>
-            Scd.scd2Merge(stagedProd, h, Seq("PRODUCTID"), prodAttrs,
-              asOfD)
-          case None => stagedProd
-            .withColumn("current_flag", lit(1L))
-            .withColumn("eff_dt", asOfD)
-            .withColumn("exp_dt", lit(null).cast("date"))
-        }
-        wh.casOverwrite(prodHist, "ods_product_hist", retries)
-      } finally {
-        stagedProd.unpersist()
-        ()
+      val (stagedProd, check) = Warehouse.constraintGate(
+        BikesPipeline.stage(raw.product,
+          Seq("PRODUCTID", "PRODCATEGORYID", "PARTNERID", "PRICE")),
+        "ods_product_hist", Seq("PRODUCTID"))
+      val prodAttrs = Seq("PRODCATEGORYID", "PARTNERID", "PRICE")
+      // sort-merge joins on the history, whatever the sizes: the
+      // planner's size estimates of the extract and of the history lie
+      // close together, so a size-chosen plan (build side, broadcast or
+      // not) changed from day to day and compiled new classes each time
+      // it did. The gate's key shuffle already sorts the extract.
+      val prodHist = prior("ods_product_hist") match {
+        case Some(h) =>
+          Scd.scd2Merge(stagedProd, h.hint("merge"), Seq("PRODUCTID"),
+            prodAttrs, asOfD)
+        case None => stagedProd
+          .withColumn("current_flag", lit(1L))
+          .withColumn("eff_dt", asOfD)
+          .withColumn("exp_dt", lit(null).cast("date"))
       }
+      wh.casOverwrite(prodHist, "ods_product_hist", retries,
+        validate = check)
     }
     val rawByName: Map[String, DataFrame] = Map(
       "ods_address" -> raw.address,

@@ -168,7 +168,8 @@ object Scd {
     * flag-1 version would land for that key. Null business keys in src
     * are treated as NEW keys (a left join never matches them against
     * current) — assert/dedupe upstream if the source can emit them
-    * (see `Warehouse.checkConstraints`).
+    * (see `Warehouse.checkConstraints`; `Pipeline.runDailyCat` runs the
+    * same gate inside each ODS table's write, `Warehouse.constraintGate`).
     */
   def scd2Merge(src: DataFrame, hist: DataFrame, keys: Seq[String],
       attrs: Seq[String], asOf: Column,

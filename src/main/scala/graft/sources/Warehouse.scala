@@ -220,33 +220,6 @@ final case class Warehouse(root: String,
     delete(old)
   }
 
-  /** Audited insert-only load: [[append]] plus IN-FLIGHT quality
-    * metrics via `Dataset.observe` — row count and null-key count are
-    * accumulated by the write job ITSELF (Spark's observation metrics
-    * ride the existing tasks), so the telemetry costs ZERO extra
-    * passes over the data. The complement to
-    * [[Warehouse.checkConstraints]]: that gate runs a separate
-    * aggregate BEFORE the write and can abort a dirty load; this one
-    * reports from inside the write — at 100 TB the free-metrics form
-    * is what every routine load runs, with the blocking pre-check
-    * reserved for sources that have actually burned you.
-    *
-    * Returns (rows written, rows with a NULL in any of `keys`) —
-    * a non-zero second component is the alert/rollback trigger.
-    */
-  def appendAudited(df: DataFrame, table: String,
-      keys: Seq[String]): (Long, Long) = {
-    import org.apache.spark.sql.Observation
-    import org.apache.spark.sql.functions._
-    val obs = Observation()
-    val nullCond = keys.map(col(_).isNull)
-      .reduceOption(_ || _).getOrElse(lit(false))
-    append(df.observe(obs, count(lit(1)).as("rows"),
-      count(when(nullCond, lit(1))).as("null_keys")), table)
-    val m = obs.get
-    (m("rows").asInstanceOf[Long], m("null_keys").asInstanceOf[Long])
-  }
-
   /** Small-file COMPACTION — the table-maintenance job every
     * incremental warehouse needs at scale: repeated [[append]]s of
     * daily deltas leave one file per delta per task, and a year of
@@ -4108,12 +4081,21 @@ final case class Warehouse(root: String,
     * retries with the SAME staged data — no recompute, no
     * staged-dir churn. Readers replay from this commit; prior waves
     * become history (reclaimable after [[casTruncate]]).
+    *
+    * `validate` runs once, after the write and before the first CAS:
+    * the check of a gate folded into `df`'s plan
+    * ([[Warehouse.constraintGate]]). If it throws, the staged
+    * directory is deleted and the exception propagates; the head
+    * does not move.
     */
   def casOverwrite(df: DataFrame, table: String, retries: Int = 8,
-      beforeCommit: () => Unit = () => ()): Int = {
+      beforeCommit: () => Unit = () => (),
+      validate: () => Unit = () => ()): Int = {
     val staged = new File(new File(dir(table + "__data")),
       java.util.UUID.randomUUID().toString)
     df.write.mode("errorifexists").parquet(staged.getPath)
+    try validate()
+    catch { case e: Throwable => delete(staged); throw e }
     var attempt = 0
     while (attempt < retries) {
       val n = casHead(table) + 1
@@ -4900,22 +4882,75 @@ object Warehouse {
     * fields (struct(null) is non-null); the check is sound only because
     * the NOT NULL violation throws before the nk != n comparison runs,
     * so no null-keyed row ever reaches the uniqueness count.
+    *
+    * Its callers are the WAP audit ([[Warehouse.wapAudit]]), which
+    * checks a staged wave before anything publishes it, and the serial
+    * [[graft.etl.Pipeline.runDaily]]. The catalog-tier refresh
+    * ([[graft.etl.Pipeline.runDailyCat]]) runs the same gate inside
+    * each ODS table's write instead ([[constraintGate]]).
     */
   def checkConstraints(df: DataFrame, table: String, keys: Seq[String],
       notNull: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.functions._
     val required = (keys ++ notNull).distinct
-    val nullCond = required.map(col(_).isNull)
-      .reduceOption(_ || _).getOrElse(lit(false))
     // count(when(...)) not sum(when(...)): sum over ZERO rows is null,
     // and an empty batch (no new rows today) must pass the gate, not
     // NPE on Row.getLong
     val stats = df.agg(
       count(lit(1)).as("n"),
-      count(when(nullCond, lit(1))).as("nulls"),
+      count(when(anyNull(required), lit(1))).as("nulls"),
       countDistinct(struct(keys.map(col): _*)).as("nk")).head()
     val (n, nulls, nk) =
       (stats.getLong(0), stats.getLong(1), stats.getLong(2))
+    failOnViolation(table, keys, required, n, nulls, nk)
+    df
+  }
+
+  /** [[checkConstraints]] folded into the plan that writes `df`: no
+    * job of its own. Returns the frame to build the write on and the
+    * check to run after that write ran (`casOverwrite`'s `validate`).
+    *
+    * The counts ride the write's own tasks: `Dataset.observe` counts
+    * rows, rows with a NULL in `keys ++ notNull`, and rows numbered
+    * past the first of their key by `row_number()` over the key
+    * partition, so distinct keys = rows − those. The window's key
+    * shuffle is the one a merge on the same keys needs, so a merge
+    * downstream shuffles the batch once. The check throws
+    * [[checkConstraints]]'s exceptions, word for word.
+    *
+    * One write per gate: the observation completes with the first
+    * execution of the returned frame, and the check reads that one.
+    */
+  def constraintGate(df: DataFrame, table: String, keys: Seq[String],
+      notNull: Seq[String] = Nil): (DataFrame, () => Unit) = {
+    import org.apache.spark.sql.Observation
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    val required = (keys ++ notNull).distinct
+    val obs = Observation()
+    val rn = "__gate_rn"
+    val gated = df
+      .withColumn(rn, row_number().over(
+        Window.partitionBy(keys.map(col): _*).orderBy(keys.map(col): _*)))
+      .observe(obs, count(lit(1)).as("n"),
+        count(when(anyNull(required), lit(1))).as("nulls"),
+        count(when(col(rn) > 1, lit(1))).as("dups"))
+      .drop(rn)
+    def check(): Unit = {
+      val m = obs.get.view.mapValues(_.asInstanceOf[Long])
+      failOnViolation(table, keys, required, m("n"), m("nulls"),
+        m("n") - m("dups"))
+    }
+    (gated, check _)
+  }
+
+  private def anyNull(cols: Seq[String]): Column = {
+    import org.apache.spark.sql.functions._
+    cols.map(col(_).isNull).reduceOption(_ || _).getOrElse(lit(false))
+  }
+
+  private def failOnViolation(table: String, keys: Seq[String],
+      required: Seq[String], n: Long, nulls: Long, nk: Long): Unit = {
     if (nulls > 0)
       throw new IllegalStateException(
         s"$table: $nulls row(s) violate NOT NULL on " +
@@ -4924,7 +4959,6 @@ object Warehouse {
       throw new IllegalStateException(
         s"$table: primary key ${keys.mkString("(", ", ", ")")} has " +
           s"${n - nk} duplicate row(s) ($n rows, $nk distinct keys)")
-    df
   }
 }
 

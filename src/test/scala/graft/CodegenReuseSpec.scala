@@ -1,15 +1,20 @@
 package graft
 
+import org.apache.spark.GraftTestBus
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.debug.codegenStringSeq
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.StaticSQLConf
-import graft.etl.BikesPipeline
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.etl.{BikesPipeline, Pipeline}
 import graft.ops.{Calendar, Derive, Scd}
+import graft.sources.Warehouse
 
 /** A warm refresh compiles nothing new: the session builders size the
-  * codegen class cache, and the as-of day stays out of the generated
-  * code, so a plan built for tomorrow compiles to today's classes.
+  * codegen class cache, the as-of day stays out of the generated code,
+  * and no ODS publication's plan depends on the day's input sizes, so
+  * a plan built for tomorrow compiles to today's classes.
   */
 class CodegenReuseSpec extends SparkSpec {
   import spark.implicits._
@@ -119,6 +124,87 @@ class CodegenReuseSpec extends SparkSpec {
     }
     viaLit.transpose.foreach { case Seq((name, a), (_, b)) =>
       assert(code(a) != code(b), s"$name: the literal did not reach code")
+    }
+  }
+
+  /** Day `d`'s extracts, parquet-backed: `products` products, each
+    * day's prices one higher than the day before (so every product
+    * already held is an SCD2 change), one order per day.
+    */
+  private def dayInputs(d: Int, products: Int): Pipeline.Inputs = {
+    def p(df: DataFrame, name: String) = parquet(df, s"day$d-$name")
+    Pipeline.Inputs(
+      customer = p(Seq((10L, "Ann", "Lee", "F", "15-06-1980"),
+        (11L + d, "Bob", "Ng", "M", "15-06-1961"))
+        .toDF("customer_id", "first_name", "last_name", "gender", "DOB"),
+        "customer"),
+      address = p(Seq((1L, "X", "Y", "R1", 9L + d))
+        .toDF("ADDRESSID", "CITY", "COUNTRY", "REGION", "POSTALCODE"),
+        "address"),
+      businessPartner = p(Seq((7L, "a@b.c", 1L, s"Acme$d"))
+        .toDF("PARTNERID", "EMAILADDRESS", "ADDRESSID", "COMPANYNAME"),
+        "partner"),
+      productCategory = p(Seq(("C1", s"Cat$d"))
+        .toDF("PRODCATEGORYID", "PRODCATEGORYNAME"), "category"),
+      product = p((1 to products).map(i => (f"P$i%05d", "C1", 7L,
+        100L + i + d)).toDF("PRODUCTID", "PRODCATEGORYID", "PARTNERID",
+        "PRICE"), "product"),
+      productDetail = p(Seq(("P00001", s"Prod$d"))
+        .toDF("PRODUCTID", "PRODUCT_NAME"), "detail"),
+      store = p(Seq((1L, "Ann", 1L, s"12$d"))
+        .toDF("StoreID", "manager", "AddressID", "phone"), "store"),
+      salesOrder = p(Seq((100L + d, "AMER", 10L, "Online", 1L,
+        f"${15 + d}%02d-06-2024", 3L, 10L)).toDF("SalesOrderID", "SALESORG",
+        "GROSSAMOUNT", "Ordertype", "StoreID", "Date", "RATING",
+        "customer_id"), "order"),
+      salesOrderItems = p(Seq((1000L + d, "P00001", 100L + d, 5L, 1L))
+        .toDF("SalesOrderItemsID", "PRODUCTID", "SalesOrderID",
+          "GROSSAMOUNT", "QUANTITY"), "items"))
+  }
+
+  /** The whole-stage Java of each ODS table's write in one refresh. */
+  private def odsWriteCode(wh: Warehouse, d: Int,
+      products: Int): Map[String, Seq[String]] = {
+    val written = new java.util.concurrent.ConcurrentHashMap[String,
+      Seq[String]]
+    // the table a plan writes, not one it reads (DW builds read ods_*)
+    val table = """InsertIntoHadoopFsRelationCommand \S*/(ods_\w+)__data/""".r
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution,
+          ns: Long): Unit =
+        table.findFirstMatchIn(qe.executedPlan.toString).foreach(m =>
+          written.put(m.group(1),
+            codegenStringSeq(qe.executedPlan).map(_._2)))
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    GraftTestBus.drain(sc)
+    spark.listenerManager.register(listener)
+    try Pipeline.runDailyCat(spark, wh, dayInputs(d, products),
+      f"2024-06-${15 + d}%02d")
+    finally {
+      GraftTestBus.drain(sc)
+      spark.listenerManager.unregister(listener)
+    }
+    scala.jdk.CollectionConverters.MapHasAsScala(written).asScala.toMap
+  }
+
+  test("the gated ODS publications compile to the same Java on two " +
+    "days whose extracts differ in size: no join plan of an SCD merge " +
+    "depends on the day's input sizes") {
+    val wh = Warehouse(s"$dir/wh")
+    odsWriteCode(wh, 0, 400) // the priors
+    // the product extract is far smaller, then far larger, than the
+    // pinned product history: a size-chosen build side or broadcast
+    // would differ between these two days
+    val small = odsWriteCode(wh, 1, 2)
+    val large = odsWriteCode(wh, 2, 4000)
+    val ods = Pipeline.allTables.filter(_.startsWith("ods_"))
+    assert(small.keySet == ods.toSet && large.keySet == ods.toSet)
+    ods.foreach { t =>
+      assert(small(t).nonEmpty, s"$t: no whole-stage code")
+      assert(small(t) == large(t), s"$t: generated code differs between days")
     }
   }
 

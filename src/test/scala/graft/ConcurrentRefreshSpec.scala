@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.GraftTestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import graft.etl.Pipeline
 import graft.sources.Warehouse
 
@@ -105,6 +106,55 @@ class ConcurrentRefreshSpec extends SparkSpec {
       assert(moved == expected, s"$t moved by $moved versions")
     }
     assert(wh.catSnapshot() == cat, "the failed refresh moved a pin")
+  }
+
+  test("a NULL key fails the gate inside the write: the refresh throws " +
+    "'violate NOT NULL', moves no pin and leaves no staged directory") {
+    val wh = tmpWh()
+    Pipeline.runDailyCat(spark, wh, inputs(0), asOf(0))
+    val data = new java.io.File(wh.root, "ods_address__data")
+    val staged = data.list().toSet
+    val (head, cat) = (wh.casHead("ods_address"), wh.catSnapshot())
+    val nullKey = Seq((Option(1L), "X", "Y", "R1", 9L),
+      (Option.empty[Long], "Z", "Y", "R1", 8L))
+      .toDF("ADDRESSID", "CITY", "COUNTRY", "REGION", "POSTALCODE")
+    val e = intercept[IllegalStateException] {
+      Pipeline.runDailyCat(spark, wh, inputs(1).copy(address = nullKey),
+        asOf(1))
+    }
+    assert(e.getMessage ==
+      "ods_address: 1 row(s) violate NOT NULL on (ADDRESSID)", e.getMessage)
+    assert(wh.catSnapshot() == cat, "the failed refresh moved a pin")
+    assert(wh.casHead("ods_address") == head)
+    assert(data.list().toSet == staged, "an orphan staged directory")
+  }
+
+  test("one refresh is at most 16 SQL executions: each ODS table's " +
+    "gate runs inside its write") {
+    val wh = tmpWh()
+    Pipeline.runDailyCat(spark, wh, inputs(0), asOf(0))
+    val sc = spark.sparkContext
+    val tag = "refresh-" + java.util.UUID.randomUUID()
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.description == tag =>
+          started.incrementAndGet()
+          ()
+        case _ => ()
+      }
+    }
+    GraftTestBus.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobDescription(tag)
+    try Pipeline.runDailyCat(spark, wh, inputs(1), asOf(1))
+    finally {
+      sc.setJobDescription(null)
+      GraftTestBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(started.get > 0 && started.get <= 16,
+      s"${started.get} SQL executions")
   }
 
   test("the refresh pool does not grow: after five refreshes at most " +

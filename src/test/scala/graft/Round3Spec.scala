@@ -59,6 +59,74 @@ class Round3Spec extends SparkSpec {
     }
   }
 
+  // ---- Warehouse.constraintGate: the same gate inside casOverwrite ----
+
+  /** Publishes `df` through the folded gate and checks it against
+    * [[Warehouse.checkConstraints]]: the same exception text on a
+    * violation, then no head move and no staged directory left; the
+    * rows landed otherwise. Returns the violation's message, if any.
+    */
+  private def viaGate(df: org.apache.spark.sql.DataFrame, table: String,
+      keys: Seq[String], notNull: Seq[String] = Nil): Option[String] = {
+    val wh = Warehouse(
+      java.nio.file.Files.createTempDirectory("gate-").toString)
+    val data = new java.io.File(wh.root, table + "__data")
+    val expected = scala.util.Try(
+      Warehouse.checkConstraints(df, table, keys, notNull))
+      .failed.toOption.map(_.asInstanceOf[IllegalStateException].getMessage)
+    val (gated, check) = Warehouse.constraintGate(df, table, keys, notNull)
+    val got = scala.util.Try(wh.casOverwrite(gated, table, validate = check))
+    got.failed.foreach(e => assert(e.isInstanceOf[IllegalStateException],
+      s"$table: ${e.getClass}"))
+    assert(got.failed.toOption.map(_.getMessage) == expected)
+    if (expected.isDefined) {
+      assert(wh.casHead(table) == 0, s"$table: the head moved")
+      assert(Option(data.list()).forall(_.isEmpty),
+        s"$table: staged directory left behind")
+    } else {
+      assert(got.get == 1)
+      assert(rows(wh.casRead(spark, table)) == rows(df))
+    }
+    expected
+  }
+
+  test("constraintGate in casOverwrite passes a clean frame") {
+    assert(viaGate(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), "t",
+      Seq("id")).isEmpty)
+  }
+
+  test("constraintGate in casOverwrite rejects duplicate primary keys") {
+    val df = Seq((1L, "a"), (1L, "b"), (2L, "c")).toDF("id", "v")
+    assert(viaGate(df, "ods_x", Seq("id")).contains(
+      "ods_x: primary key (id) has 1 duplicate row(s) " +
+        "(3 rows, 2 distinct keys)"))
+  }
+
+  test("constraintGate in casOverwrite rejects null keys and null " +
+    "NOT NULL attrs") {
+    val withNullKey = Seq((Some(1L), "a"), (None, "b")).toDF("id", "v")
+    assert(viaGate(withNullKey, "t", Seq("id"))
+      .contains("t: 1 row(s) violate NOT NULL on (id)"))
+    val withNullAttr = Seq((1L, Some("a")), (2L, None)).toDF("id", "v")
+    assert(viaGate(withNullAttr, "t", Seq("id"), Seq("v"))
+      .contains("t: 1 row(s) violate NOT NULL on (id, v)"))
+    assert(viaGate(withNullAttr, "t", Seq("id")).isEmpty)
+  }
+
+  test("constraintGate in casOverwrite passes an EMPTY batch") {
+    assert(viaGate(Seq.empty[(Long, String)].toDF("id", "v"), "t",
+      Seq("id"), Seq("v")).isEmpty)
+  }
+
+  test("constraintGate in casOverwrite on a composite key") {
+    val df = Seq((1L, 1L, "x"), (1L, 2L, "y")).toDF("a", "b", "v")
+    assert(viaGate(df, "t", Seq("a", "b")).isEmpty)
+    val dup = df.unionAll(Seq((1L, 2L, "z")).toDF("a", "b", "v"))
+    assert(viaGate(dup, "t", Seq("a", "b")).contains(
+      "t: primary key (a, b) has 1 duplicate row(s) " +
+        "(3 rows, 2 distinct keys)"))
+  }
+
   // ---- Approx.heavyHitters: margin + broadcast candidate routing ----
 
   test("heavyHitters at tiny support (broadcast-join path) is exact") {

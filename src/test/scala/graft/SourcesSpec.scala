@@ -170,23 +170,6 @@ class SourcesSpec extends SparkSpec {
     assert(staged.getMessage != null)
   }
 
-  test("appendAudited: the write job itself reports row and null-key " +
-    "counts (no second pass), and the data still lands") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-audit").toString
-    val wh = sources.Warehouse(root)
-    val df = Seq((Option(1L), "a"), (Option(2L), "b"), (None, "c"))
-      .toDF("k", "v")
-    val (rows, nullKeys) = wh.appendAudited(df, "t", Seq("k"))
-    assert(rows == 3L && nullKeys == 1L)
-    assert(wh.read(spark, "t").count() == 3)
-    // clean load reports zero violations
-    val (r2, n2) = wh.appendAudited(
-      Seq((Option(4L), "d")).toDF("k", "v"), "t", Seq("k"))
-    assert(r2 == 1L && n2 == 0L)
-    assert(wh.read(spark, "t").count() == 4)
-  }
-
   test("schema evolution on read: a column added by later appends is " +
     "visible under mergeSchema, null for pre-evolution rows, and " +
     "absent columns never fail the old readers") {
