@@ -24,7 +24,8 @@ import org.apache.spark.sql.SparkSession
 object SessionScratch {
 
   private val dirs = new ConcurrentHashMap[(String, String), Path]()
-  private val written = new ConcurrentHashMap[(String, String), Boolean]()
+  private final class Written { var done = false }
+  private val written = new ConcurrentHashMap[(String, String), Written]()
   // identity-keyed test nonces, same device as [[Materialized]]: a
   // nonce-pinned clone gets its own scratch scope so invariance tests
   // rebuild on-disk artifacts under the clone's conf instead of
@@ -55,9 +56,16 @@ object SessionScratch {
   /** Run `write` exactly once per (scope, key); concurrent and
     * repeated callers wait for / reuse the first invocation's artifact.
     * A failed write is not recorded, so the next caller retries.
+    * `write` runs under the key's own lock, not inside the map's
+    * `computeIfAbsent`: a write may call `once` for another key (the
+    * LM scorer's scratch build writes its bigram frame's scratch), and
+    * a nested `computeIfAbsent` on a key in the same bin throws
+    * "Recursive update".
     */
-  def once(spark: SparkSession, key: String)(write: => Unit): Unit =
-    written.computeIfAbsent((scope(spark), key), _ => { write; true })
+  def once(spark: SparkSession, key: String)(write: => Unit): Unit = {
+    val w = written.computeIfAbsent((scope(spark), key), _ => new Written)
+    w.synchronized { if (!w.done) { write; w.done = true } }
+  }
 
   /** A short filesystem/catalog-safe token for an input path — used to
     * key table names per sf dir so different corpora never share an

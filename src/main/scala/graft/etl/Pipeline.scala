@@ -12,13 +12,13 @@ import graft.sources.Warehouse
 
 /** The reference's full daily refresh as one orchestrated run
   * (E1: ETLScript_withSCDimplementation.py, nine table blocks; then
-  * E2: BikesDWSQl.sql, seven statements in order). Each step is a
-  * DataFrame pipeline ending in a warehouse write; ordering matters
-  * only for the self-referential reads (SCD targets, CDC facts read
-  * their own prior contents — E1 step 3 / DW:62,94) and for the DW
-  * builds reading the ODS zone. [[runDaily]] runs the steps in the
-  * reference's serial order; [[runDailyCat]] runs each zone's tables
-  * as one concurrent wave.
+  * E2: BikesDWSQl.sql, seven statements in order), published as one
+  * catalog transaction by [[runDailyCat]]. Each step is a DataFrame
+  * pipeline ending in a warehouse write; ordering matters only for
+  * the self-referential reads (SCD targets, CDC facts read their own
+  * prior contents — E1 step 3 / DW:62,94) and for the DW builds
+  * reading the ODS zone, so each zone's tables run as one concurrent
+  * wave.
   */
 object Pipeline {
 
@@ -57,123 +57,6 @@ object Pipeline {
         "GROSSAMOUNT", "QUANTITY"), Nil,
       Seq("SalesOrderItemsID"), Seq("PRODUCTID", "SalesOrderID",
         "GROSSAMOUNT", "QUANTITY")))
-
-  private def scd1Load(spark: SparkSession, wh: Warehouse, name: String,
-      staged: DataFrame, keys: Seq[String], attrs: Seq[String]): Unit = {
-    // persist: the constraint gate is an extra action over the staging
-    // lineage — without caching, the merge below would recompute the
-    // full stage* transform chain a second time. Safe to cache: staged
-    // derives from the raw inputs, never from a warehouse path this
-    // load overwrites (see the Scd.scd2Merge stale-cache note).
-    val cached = staged.persist()
-    try {
-      // DDL constraint gate (Createtables_BIKES.sql PKs): key
-      // uniqueness + NOT NULL must hold BEFORE the merge — scd1Merge
-      // assumes one src row per key, and a violating batch must fail
-      // the load, not corrupt the dimension.
-      Warehouse.checkConstraints(cached, name, keys)
-      val merged =
-        if (wh.exists(name))
-          Scd.scd1Merge(cached, wh.read(spark, name), keys, attrs)
-        else cached
-      wh.mergeOverwrite(merged, name)
-    } finally {
-      cached.unpersist()
-      ()
-    }
-  }
-
-  /** One daily refresh: staging → ODS SCD merges → DW build, one
-    * table after another. It stays serial because its writes are
-    * single-writer devices: [[Warehouse.mergeOverwrite]]'s
-    * `.tmp`/`.old` swap journal and the plain `overwrite`/`append`
-    * paths assume no other writer, so only the CAS-logged
-    * [[runDailyCat]] publishes concurrently.
-    */
-  def runDaily(spark: SparkSession, wh: Warehouse, raw: Inputs,
-      asOf: String): Unit = {
-    val asOfD = Derive.asOfDay(asOf)
-
-    // ---- E1: staging + SCD merges into the ODS zone ----
-    val stagedCust = BikesPipeline.stageCustomer(raw.customer, asOfD)
-    scd1Load(spark, wh, "ods_customer", stagedCust, Seq("customer_id"),
-      Seq("first_name", "last_name", "gender", "DOB", "Age", "Agerange"))
-
-    val rawByName: Map[String, DataFrame] = Map(
-      "ods_address" -> raw.address,
-      "ods_business_partner" -> raw.businessPartner,
-      "ods_product_category" -> raw.productCategory,
-      "ods_product_detail" -> raw.productDetail,
-      "ods_store" -> raw.store,
-      "ods_sales_order" -> raw.salesOrder,
-      "ods_sales_order_items" -> raw.salesOrderItems)
-    scd1Tables.foreach { case (name, keep, dateCols, keys, attrs) =>
-      val staged = BikesPipeline.stage(rawByName(name), keep, dateCols)
-      scd1Load(spark, wh, name, staged, keys, attrs)
-    }
-
-    // Product: SCD Type-2 versioned history (py:630-717)
-    val stagedProd = BikesPipeline.stage(raw.product,
-      Seq("PRODUCTID", "PRODCATEGORYID", "PARTNERID", "PRICE"))
-      .persist() // gate + merge both consume it (see scd1Load note)
-    try {
-      Warehouse.checkConstraints(stagedProd, "ods_product_hist",
-        Seq("PRODUCTID"))
-      val prodAttrs = Seq("PRODCATEGORYID", "PARTNERID", "PRICE")
-      val prodHist =
-        if (wh.exists("ods_product_hist"))
-          Scd.scd2Merge(stagedProd, wh.read(spark, "ods_product_hist"),
-            Seq("PRODUCTID"), prodAttrs, asOfD)
-        else stagedProd
-          .withColumn("current_flag", lit(1L))
-          .withColumn("eff_dt", asOfD)
-          .withColumn("exp_dt", lit(null).cast("date"))
-      wh.mergeOverwrite(prodHist, "ods_product_hist")
-    } finally {
-      stagedProd.unpersist()
-      ()
-    }
-
-    // ---- E2: warehouse build (BikesDWSQl.sql:22-200, in order) ----
-    def ods(n: String) = wh.read(spark, n)
-    val items = ods("ods_sales_order_items")
-    val orders = ods("ods_sales_order")
-
-    wh.overwrite(BikesPipeline.prdctSmFct(items, orders, asOfD),
-      "dw_prdct_sm_fct")
-
-    val ordrSmExisting =
-      if (wh.exists("dw_ordr_sm_fct"))
-        wh.read(spark, "dw_ordr_sm_fct").select("Ordr_ID")
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        new org.apache.spark.sql.types.StructType()
-          .add("Ordr_ID", org.apache.spark.sql.types.LongType))
-    wh.append(BikesPipeline.ordrSmFct(items, orders, ordrSmExisting,
-      asOfD), "dw_ordr_sm_fct")
-
-    val ordrDtlExisting =
-      if (wh.exists("dw_ordr_dtl_fct"))
-        wh.read(spark, "dw_ordr_dtl_fct").select("Ordr_ID", "Prdct_ID")
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        new org.apache.spark.sql.types.StructType()
-          .add("Ordr_ID", org.apache.spark.sql.types.LongType)
-          .add("Prdct_ID", org.apache.spark.sql.types.StringType))
-    wh.append(BikesPipeline.ordrDtlFct(items, orders, ordrDtlExisting,
-      asOfD), "dw_ordr_dtl_fct")
-
-    wh.overwrite(BikesPipeline.custDim(ods("ods_customer"), asOfD),
-      "dw_cust_dim")
-    wh.overwrite(BikesPipeline.strDim(ods("ods_store"),
-      ods("ods_address"), asOfD), "dw_str_dim")
-    wh.overwrite(BikesPipeline.prdctDim(ods("ods_product_hist"),
-      ods("ods_product_category"), ods("ods_product_detail"),
-      ods("ods_business_partner"), ods("ods_address"), asOfD),
-      "dw_prdct_dim")
-    wh.overwrite(BikesPipeline.actPerdDim(spark, "2018-01-01",
-      "2020-12-31", asOf), "dw_act_perd_dim")
-  }
 
   /** Every table one daily refresh writes — the 9 ODS SCD targets
     * (E1) and the 7 DW builds (E2). [[runDailyCat]] pins ALL of them
@@ -232,15 +115,14 @@ object Pipeline {
     }
   }
 
-  /** [[runDaily]] re-based onto the CATALOG tier: the ENTIRE daily
-    * refresh — nine SCD merges and seven DW builds — publishes as ONE
-    * cross-table catalog transaction, which is the reference's actual
-    * transaction story (BikesDWSQl.sql runs every DW statement inside
-    * a single T-SQL batch ending in one `commit`, line 202: a reader
-    * can never join new `Prdct_Sm_Fct` against old `Cust_Dim`).
-    * [[runDaily]]'s single-writer devices cannot give that across
-    * TABLES — a catalog reader mid-refresh there sees whichever
-    * subset has landed. Here:
+  /** One daily refresh on the CATALOG tier: the ENTIRE refresh — nine
+    * SCD merges and seven DW builds — publishes as ONE cross-table
+    * catalog transaction, which is the reference's actual transaction
+    * story (BikesDWSQl.sql runs every DW statement inside a single
+    * T-SQL batch ending in one `commit`, line 202: a reader can never
+    * join new `Prdct_Sm_Fct` against old `Cust_Dim`). Table-at-a-time
+    * writes cannot give that across TABLES — a reader mid-refresh
+    * would see whichever subset has landed. Here:
     *
     *  1. every read of prior state resolves through ONE catalog
     *     snapshot taken at entry (`base`) — the refresh derives from

@@ -99,7 +99,7 @@ object Extras6 {
   /** TIMESTAMP TIME TRAVEL — `SELECT … TIMESTAMP AS OF` over the
     * monotone `TS` line every commit leads with
     * ([[graft.sources.Warehouse.casReadAsOf]] /
-    * [[graft.sources.Warehouse.catSnapshotAt]]): three order waves
+    * [[graft.sources.Warehouse.catVersionAsOf]]): three order waves
     * land under an injected clock (t=1000/2000/3000, each pinned by a
     * catalog transaction at the same instant), and the evidence reads
     * the warehouse at t=2500 — resolution is a BINARY SEARCH over

@@ -5,16 +5,18 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Parquet-backed warehouse table (SURVEY S2, S4-S6): read, append
   * (insert-only load), full refresh (DELETE+INSERT → overwrite), and
-  * merge-overwrite — the read-modify-overwrite that replaces the
-  * reference's per-row UPDATE loop (S5,
-  * ETLScript_withSCDimplementation.py:86-91).
+  * the CAS commit log plus the cross-table catalog that publish the
+  * daily refresh ([[graft.etl.Pipeline.runDailyCat]]): each SCD
+  * target's merged state lands as one REPLACE commit, the
+  * read-modify-overwrite that replaces the reference's per-row UPDATE
+  * loop (S5, ETLScript_withSCDimplementation.py:86-91).
   *
-  * `mergeOverwrite` materializes the merged result in a sibling temp
-  * directory first, then swaps — the self-referential read-before-write
-  * (E1 step 3) never overwrites the data it is still reading, and a
-  * crash mid-write leaves the old table intact. On a real deployment an
-  * ACID table format (Delta/Iceberg — not in this container) replaces
-  * the swap with an atomic commit; callers are unchanged.
+  * `mergeOverwrite` is the single-writer form for rewrites that read
+  * their own target ([[Warehouse.mergeInto]],
+  * [[Warehouse.reclusterDelta]]): it materializes the result in a
+  * sibling temp directory first, then swaps, so the read never sees
+  * its own output and a crash mid-write leaves the old table intact.
+  * The CAS log replaces the swap with an atomic commit.
   */
 /** Evidence a [[Warehouse.casDeleteWhere]] returns: the committed
   * version, how many active commits were rewritten vs retained by
@@ -146,19 +148,12 @@ final case class Warehouse(root: String,
   def append(df: DataFrame, table: String): Unit =
     df.write.mode("append").parquet(dir(table))
 
-  /** Partitioned insert (the 100 TB fact layout, SURVEY §4: facts
-    * partitioned by their date key). Date-filtered reads then prune
-    * whole partitions (`PartitionFilters` in the scan) instead of
-    * scanning data files.
-    */
-  def appendPartitioned(df: DataFrame, table: String,
-      partitionCols: Seq[String]): Unit =
-    df.write.mode("append").partitionBy(partitionCols: _*)
-      .parquet(dir(table))
-
-  /** Partitioned full build — [[appendPartitioned]]'s layout with
-    * overwrite semantics, for rebuilt facts and for writes that must
-    * be idempotent under retry (a failed attempt can't double rows).
+  /** Partitioned full build (the 100 TB fact layout, SURVEY §4:
+    * facts partitioned by their date key). Date-filtered reads then
+    * prune whole partitions (`PartitionFilters` in the scan) instead
+    * of scanning data files. Overwrite semantics, for rebuilt facts
+    * and for writes that must be idempotent under retry (a failed
+    * attempt can't double rows).
     */
   def overwritePartitioned(df: DataFrame, table: String,
       partitionCols: Seq[String]): Unit =
@@ -220,215 +215,6 @@ final case class Warehouse(root: String,
     delete(old)
   }
 
-  /** Small-file COMPACTION — the table-maintenance job every
-    * incremental warehouse needs at scale: repeated [[append]]s of
-    * daily deltas leave one file per delta per task, and a year of
-    * them makes every scan pay thousands of file opens (the classic
-    * small-file problem; at 100 TB the open/footer cost dwarfs the
-    * data read). Rewrites the table into
-    * max(1, ceil(bytes / targetFileBytes)) files via the same
-    * crash-safe tmp-write-and-swap as [[mergeOverwrite]] — readers
-    * never see a half-compacted table, rows are bit-identical (spec:
-    * SourcesSpec). Size is measured from the live files (driver-side
-    * directory walk — metadata only, the local stand-in for a
-    * FileSystem.listFiles on a real cluster).
-    *
-    * `coalesce`, not `repartition`: compaction must not pay a full
-    * shuffle of the table — coalesce merges existing splits map-side.
-    * The trade: no rebalancing of skewed input files (a shuffle-free
-    * compaction keeps whatever row order the inputs had, which also
-    * preserves any write-time sort locality).
-    */
-  def compact(spark: SparkSession, table: String,
-      targetFileBytes: Long = 128L << 20): Unit = {
-    // a partitioned table would come back UNPARTITIONED from this
-    // rewrite (read + coalesce + flat overwrite silently drops the
-    // hive layout and with it every pruned read) — refuse loudly;
-    // partitioned compaction is per-partition rewrites, a different
-    // operation
-    val parts = Option(new File(dir(table)).listFiles()).getOrElse(Array())
-    require(!parts.exists(f => f.isDirectory && f.getName.contains("=")),
-      s"compact($table): table is hive-partitioned; use " +
-        "compactPartitioned, which rewrites each partition in place")
-    val bytes = size(new File(dir(table)))
-    val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
-    mergeOverwrite(read(spark, table).coalesce(nFiles.toInt), table)
-  }
-
-  /** PARTITIONED compaction — the per-partition rewrite [[compact]]
-    * refuses to improvise: each hive leaf partition (`k=v` directory
-    * chain) is compacted INDIVIDUALLY to its size-targeted file
-    * count, so the layout — and every pruned read over it — is
-    * untouched by construction. Partitions already at or under their
-    * target file count are SKIPPED (their files are not rewritten at
-    * all): the daily-compaction job touches only the partitions that
-    * accreted deltas, which is what makes it affordable at a
-    * 100 TB table with years of closed partitions.
-    *
-    * Each partition swap is its own crash-safe tmp-write-and-swap;
-    * the tmp/old directories live under the table root with
-    * underscore-prefixed names, which Spark's file index ignores. The
-    * same honesty note as [[mergeOverwrite]]: between the two renames
-    * there is a local-FS window in which the partition directory is
-    * ABSENT (a concurrent lister sees zero rows for it; a reader
-    * holding the pre-swap listing fails on the moved files), and a
-    * concurrent [[appendPartitioned]] into a partition being rewritten
-    * can lose its rows to the swap — compaction is a maintenance job
-    * to run without concurrent writers, and an ACID table format is
-    * what removes the window entirely. A crash inside one partition's
-    * swap window leaves a `_compact_old__<partition>` directory that
-    * the next call restores before doing anything else.
-    */
-  def compactPartitioned(spark: SparkSession, table: String,
-      targetFileBytes: Long = 128L << 20): Unit = {
-    val root = new File(dir(table))
-    require(root.exists(), s"compactPartitioned($table): no such table")
-    recoverPartitions(root)
-    def leaves(f: File): Seq[File] = {
-      val kids = Option(f.listFiles()).getOrElse(Array())
-      val sub = kids.filter(d => d.isDirectory && d.getName.contains("="))
-      if (sub.isEmpty) Seq(f) else sub.toSeq.flatMap(leaves)
-    }
-    val parts = leaves(root).filterNot(_ == root)
-    require(parts.nonEmpty,
-      s"compactPartitioned($table): no hive partition directories — " +
-        "use compact for flat tables")
-    parts.foreach { p =>
-      val data = Option(p.listFiles()).getOrElse(Array())
-        .filter(f => f.isFile && !f.getName.startsWith("_") &&
-          !f.getName.startsWith("."))
-      val bytes = data.map(_.length).sum
-      val nFiles =
-        math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-      if (data.length > nFiles) {
-        val tag = root.toPath.relativize(p.toPath).toString
-          .replace(File.separator, "__SEP__")
-        val tmp = new File(root, s"_compact_tmp__$tag")
-        val old = new File(root, s"_compact_old__$tag")
-        delete(tmp); delete(old)
-        // reading the partition DIRECTORY directly yields only the
-        // data columns (partition values stay encoded in the path,
-        // exactly where the rewrite puts the files back)
-        spark.read.parquet(p.getPath).coalesce(nFiles)
-          .write.mode("overwrite").parquet(tmp.getPath)
-        if (!p.renameTo(old))
-          sys.error(s"swap failed: cannot move $p aside")
-        if (!tmp.renameTo(p))
-          sys.error(s"swap failed: cannot move $tmp into place")
-        delete(old)
-      }
-    }
-  }
-
-  /** Roll back partitions caught in [[compactPartitioned]]'s swap
-    * window: a `_compact_old__<tag>` with no live partition dir is
-    * the last complete copy — restore it; any `_compact_tmp__` is an
-    * unfinished write and is discarded.
-    */
-  private def recoverPartitions(root: File): Unit =
-    Option(root.listFiles()).getOrElse(Array()).foreach { f =>
-      if (f.getName.startsWith("_compact_tmp__")) delete(f)
-      else if (f.getName.startsWith("_compact_old__")) {
-        val live = new File(root,
-          f.getName.stripPrefix("_compact_old__").replace("__SEP__",
-            File.separator))
-        if (!live.exists()) {
-          Option(live.getParentFile).foreach(_.mkdirs())
-          if (!f.renameTo(live))
-            sys.error(s"recovery failed: cannot restore $f to $live")
-        } else delete(f)
-      }
-    }
-
-  /** BUCKETED compaction — [[compact]] for the incremental stores
-    * ([[appendBucketed]]: q137's band store, q140's IVF-PQ store),
-    * which accrete one file set per append and decay into the classic
-    * small-file problem at daily-delta cadence. Rewrites the table to
-    * ONE FILE PER BUCKET under the SAME `bucketBy`/`sortBy` spec, so
-    * every downstream bucketed join/aggregation stays exchange-free
-    * across the compacted files, then swaps via the crash-safe
-    * tmp-write-and-swap. Same honesty note as [[mergeOverwrite]] /
-    * [[compactPartitioned]]: between the live→old and tmp→live renames
-    * there is a local-FS window in which the table path is ABSENT (a
-    * reader holding the pre-swap listing fails; a concurrent lister
-    * sees no table) — run compaction without concurrent readers or
-    * writers; an ACID table format is what removes the window. The
-    * live catalog entry's spec and path are unchanged, so after the
-    * swap a metadata refresh is all a catalog consumer needs. A crash
-    * inside the window leaves a `.old` copy that [[recover]] (called
-    * on entry here and by every store op) restores before anything
-    * else runs.
-    *
-    * Shuffle-free like [[compact]], via the bucketed SCAN: each scan
-    * partition holds exactly one bucket's files, so the bucketed
-    * write emits one file per bucket with no exchange. The scan runs
-    * in a cloned session with `autoBucketedScan` pinned OFF — left
-    * on (the default), Spark drops the bucketed scan for plans that
-    * don't exploit its partitioning, the read falls back to
-    * file-split parallelism, and the "compaction" would rewrite the
-    * same file count it started with.
-    */
-  def compactBucketed(spark: SparkSession, table: String,
-      nBuckets: Int, bucketCols: Seq[String]): Unit = {
-    // a rewrite under the WRONG spec would silently corrupt every
-    // bucketed read (files hashed mod m while the catalog still
-    // declares n — pruning and joins read the wrong buckets, rows
-    // vanish with no error), so the passed spec must match the
-    // catalog's before anything is touched
-    // parse ONLY the metadata section — a data column named like a
-    // metadata label (or a null value cell) must not corrupt the check
-    val desc = spark.sql(s"DESCRIBE TABLE EXTENDED `$table`").collect()
-      .dropWhile(r => !r.getString(0).startsWith("# Detailed Table"))
-      .map(r => r.getString(0) -> Option(r.getString(1)).getOrElse(""))
-      .toMap
-    val catBuckets = desc.get("Num Buckets").map(_.trim.toInt)
-    val catCols = desc.get("Bucket Columns")
-      .map(_.replaceAll("[\\[\\]`\\s]", "").split(",").toSeq
-        .filter(_.nonEmpty))
-    require(catBuckets.contains(nBuckets),
-      s"compactBucketed($table): passed nBuckets=$nBuckets but the " +
-        s"catalog declares ${catBuckets.getOrElse("no bucketing")}")
-    require(catCols.exists(_.map(_.toLowerCase) ==
-        bucketCols.map(_.toLowerCase)),
-      s"compactBucketed($table): passed bucketCols=$bucketCols but " +
-        s"the catalog declares ${catCols.getOrElse(Seq())}")
-    recover(table)
-    val s = spark.newSession()
-    s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled",
-      "false")
-    val tmpTable = table + "__compact_tmp"
-    s.sql(s"DROP TABLE IF EXISTS `$tmpTable`")
-    val tmp = new File(dir(table + ".tmp"))
-    delete(tmp)
-    s.table(table).write.mode("overwrite")
-      .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .option("path", tmp.getPath)
-      .saveAsTable(tmpTable)
-    // external table: dropping the catalog entry leaves the files for
-    // the swap below
-    s.sql(s"DROP TABLE `$tmpTable`")
-    val live = new File(dir(table))
-    val old = new File(dir(table + ".old"))
-    if (old.exists()) delete(old)
-    if (live.exists() && !live.renameTo(old))
-      sys.error(s"swap failed: cannot move $live aside")
-    if (!tmp.renameTo(live)) sys.error(s"swap failed: cannot move $tmp in")
-    delete(old)
-    spark.catalog.refreshTable(table)
-  }
-
-  private def size(f: File): Long =
-    if (f.isDirectory) {
-      val children = f.listFiles()
-      if (children == null) 0L else children.map(size).sum
-    } else f.length()
-
-  /** Roll back from a crash inside mergeOverwrite's swap window: if no
-    * live dir exists but a `.old` does, restore it (the `.old` is the
-    * last complete table; any `.tmp` is an unfinished write and is
-    * discarded by the next write anyway).
-    */
   // ---- file-skipping statistics manifest ---------------------------
 
   /** Persist a per-file (min, max) statistics manifest for `cols` —
@@ -446,7 +232,7 @@ final case class Warehouse(root: String,
     * parquet stats convention (a file of all-NULL values in `c`
     * records NULL extents and is kept conservatively by readers).
     *
-    * Maintenance model: like [[compact]], a single-writer operation —
+    * Maintenance model: a single-writer operation —
     * rewrite the manifest after a batch of appends (the write is one
     * table scan; production formats append per-file stats at commit
     * time instead, but the CONSUMER contract is identical). Pairs
@@ -1068,59 +854,6 @@ final case class Warehouse(root: String,
     (kept.toSeq, rows.length)
   }
 
-  /** Promote the per-file Bloom sidecar to TWO LEVELS, mirroring
-    * [[writeTwoLevelManifest]] for the point-lookup path: file rows
-    * are cut into `groupSize`-file groups and each group summarizes
-    * the UNION of its files' Bloom positions (Bloom bitsets are
-    * mergeable by OR — the union admits exactly the keys any member
-    * file might hold, so group-level absence is still a PROOF of
-    * absence for every file in the group). The planner then reads
-    * nGroups summary rows plus only surviving groups' file rows,
-    * never the full file-grain sidecar.
-    */
-  def writeTwoLevelBloomManifest(spark: SparkSession, table: String,
-      c: String, groupSize: Int): Unit = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
-    val b = spark.read.parquet(dir(table + s"__bloom_$c"))
-      .withColumn("gid",
-        ((row_number().over(Window.orderBy(col("file"))) - 1)
-          / groupSize).cast("int"))
-    b.coalesce(1).write.mode("overwrite")
-      .parquet(dir(table + s"__bloom_${c}_g"))
-    spark.read.parquet(dir(table + s"__bloom_${c}_g"))
-      .groupBy("gid")
-      .agg(count(lit(1)).as("n_files"),
-        sort_array(array_distinct(flatten(
-          collect_list(col("positions"))))).as("positions"))
-      .coalesce(1).write.mode("overwrite")
-      .parquet(dir(table + s"__bloom_${c}2"))
-  }
-
-  /** Two-level Bloom consult: group summaries first (the unconditional
-    * metadata read), then only surviving groups' file rows. Returns
-    * (kept files, groups total, groups kept, file rows pulled) — the
-    * last is bounded by surviving-group sizes, the point of the tier.
-    */
-  def bloomPrunedFilesTwoLevel(spark: SparkSession, table: String,
-      c: String, key: Long, bits: Int = 4096,
-      k: Int = 4): (Seq[String], Int, Int, Int) = {
-    import org.apache.spark.sql.functions.col
-    val probe = bloomPositions(key, bits, k).toSet
-    val groups = spark.read.parquet(dir(table + s"__bloom_${c}2"))
-      .select(col("gid"), col("positions")).collect()
-    val keptGids = groups.filter(r =>
-      probe.subsetOf(r.getSeq[Int](1).toSet)).map(_.getInt(0)).toSeq
-    if (keptGids.isEmpty)
-      return (Seq.empty, groups.length, 0, 0)
-    val fileRows = spark.read.parquet(dir(table + s"__bloom_${c}_g"))
-      .filter(col("gid").isin(keptGids: _*))
-      .select(col("file"), col("positions")).collect()
-    val kept = fileRows.filter(r =>
-      probe.subsetOf(r.getSeq[Int](1).toSet)).map(_.getString(0)).toSeq
-    (kept, groups.length, keptGids.length, fileRows.length)
-  }
-
   /** Point lookup through the Bloom sidecar: open only files whose
     * filter admits the key, then apply the exact equality (Bloom is
     * a superset filter — false positives open a file for nothing,
@@ -1129,12 +862,7 @@ final case class Warehouse(root: String,
   def readPointLookup(spark: SparkSession, table: String, c: String,
       key: Long, bits: Int = 4096, k: Int = 4): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    // group-level first when the hierarchical sidecar exists — the
-    // driver never pulls the full file-grain Bloom table
-    val kept =
-      if (new File(dir(table + s"__bloom_${c}2")).exists())
-        bloomPrunedFilesTwoLevel(spark, table, c, key, bits, k)._1
-      else bloomPrunedFiles(spark, table, c, key, bits, k)._1
+    val kept = bloomPrunedFiles(spark, table, c, key, bits, k)._1
     val base =
       if (kept.isEmpty) read(spark, table).filter(lit(false))
       else spark.read.schema(read(spark, table).schema)
@@ -1166,8 +894,7 @@ final case class Warehouse(root: String,
     * lakehouse formats (Delta DVs, Iceberg equality deletes) use to
     * avoid rewriting base files for every delete: deleted keys
     * APPEND to a sidecar `<table>__dv` table (O(deletes) write, base
-    * untouched), reads subtract the vector ([[readMor]]), and
-    * [[compactDv]] folds it in when the vector grows. Key-grain
+    * untouched), and reads subtract the vector ([[readMor]]). Key-grain
     * equality deletes, not row-position deletes — this store has no
     * stable row ids; a key in the vector is deleted wherever it
     * appears.
@@ -1178,9 +905,8 @@ final case class Warehouse(root: String,
   /** Merge-on-read: base ANTI JOIN deletion vector on `keyCol`. No
     * distinct on the vector side, deliberately: anti-join semantics
     * make duplicate deleted keys harmless, so the delete path never
-    * pays a dedup shuffle — and re-applying a vector is a no-op,
-    * which is what lets [[compactDv]] drop it outside the swap
-    * window. At scale the vector is usually broadcast-sized
+    * pays a dedup shuffle, and re-applying a vector is a no-op.
+    * At scale the vector is usually broadcast-sized
     * (deletes ≪ base); AQE picks BHJ.
     */
   def readMor(spark: SparkSession, table: String,
@@ -1192,55 +918,6 @@ final case class Warehouse(root: String,
       spark.read.parquet(dvDir.getPath)
         .select(org.apache.spark.sql.functions.col(keyCol)),
       Seq(keyCol), "left_anti")
-  }
-
-  /** Fold the deletion vector into the base — the compaction that
-    * bounds MOR read cost. Writes base-minus-vector aside and swaps
-    * it live (same tmp/old rename window as [[mergeOverwrite]] — no
-    * concurrent readers/writers of the BASE during the swap; an ACID
-    * format removes the window), then drops the vector files it
-    * snapshotted AT ENTRY — and only those. Concurrency model: ONE
-    * compactor at a time (like the base swap itself), with
-    * [[deleteKeys]] appenders running freely against it. Under that
-    * model an append is never lost: it lands as a NEW file (parquet
-    * append never rewrites), so it is not in the entry snapshot and
-    * survives the per-file cleanup; in-flight `_temporary` staging is
-    * excluded from the snapshot; and the sidecar DIR is removed with
-    * the atomic empty-dir delete (File#delete fails on a non-empty
-    * directory), so an append racing the final removal keeps the dir
-    * alive rather than being swept with it. If the compaction scan
-    * happened to pick a late append up too, re-applying it is a no-op
-    * by anti-join. Crash analysis: before the swap completes, the old
-    * base plus the full vector are intact and MOR reads are
-    * unchanged; after the swap but before the vector-file delete, the
-    * snapshot files apply AGAINST THE ALREADY-COMPACTED base —
-    * idempotent (removes nothing), which is exactly why dropping them
-    * outside the swap is safe. A re-run completes the cleanup.
-    */
-  def compactDv(spark: SparkSession, table: String, keyCol: String,
-      afterSnapshot: () => Unit = () => ()): Unit = {
-    // recover FIRST: after a crash inside a previous swap the base
-    // dir is absent (moved to .old) and readMor's eager schema
-    // resolution would fail before mergeOverwrite's own recover got
-    // a chance to run
-    recover(table)
-    val dvDir = new File(dir(table + "__dv"))
-    if (!dvDir.exists()) return
-    // snapshot the vector's file list BEFORE the scan: concurrent
-    // appends land as NEW files (parquet append never rewrites), so
-    // deleting exactly this list can never drop a delete the scan
-    // didn't see. afterSnapshot is a test seam for injecting a
-    // concurrent append into that window (Round11Spec).
-    val snapshot = Option(dvDir.listFiles()).fold(Seq.empty[File])(_.toSeq)
-      .filterNot(_.getName == "_temporary") // in-flight append staging
-    afterSnapshot()
-    mergeOverwrite(readMor(spark, table, keyCol), table)
-    snapshot.foreach(delete)
-    // atomic dir removal: File#delete succeeds only on an EMPTY
-    // directory, so an append landing after the per-file cleanup
-    // keeps the dir (no list-then-delete window)
-    dvDir.delete()
-    ()
   }
 
   /** Lazy UPSERT at key grain — the other half of merge-on-read
@@ -1281,6 +958,11 @@ final case class Warehouse(root: String,
     restored.select(all.columns.map(col).toSeq: _*)
   }
 
+  /** Roll back from a crash inside mergeOverwrite's swap window: if no
+    * live dir exists but a `.old` does, restore it (the `.old` is the
+    * last complete table; any `.tmp` is an unfinished write and is
+    * discarded by the next write anyway).
+    */
   def recover(table: String): Unit = {
     val live = new File(dir(table))
     val old = new File(dir(table + ".old"))
@@ -1905,33 +1587,6 @@ final case class Warehouse(root: String,
         casRead(spark, table).filter(lit(false))
       else casResolveRead(spark, keptLines, s"casReadPruned($table)")
     base.filter(col(c).cast("long").between(lo, hi))
-  }
-
-  /** [[casReplace]] with COMMIT-TIME STATISTICS — the replace commit
-    * carries the new state's [min, max] extent on `c` (REPLACES
-    * line), so [[casReadPruned]] keeps skipping AFTER a replace: a
-    * stat-less REPLACE would otherwise force every later range read
-    * to open the replaced snapshot conservatively. Same OCC retry
-    * contract as [[casReplace]].
-    */
-  def casReplaceStats(spark: SparkSession, table: String, c: String,
-      retries: Int = 8)(fn: DataFrame => DataFrame): Int = {
-    import org.apache.spark.sql.functions.{col, max, min}
-    var attempt = 0
-    while (attempt < retries) {
-      val head = casHead(table)
-      val out = fn(casRead(spark, table))
-      val staged = new File(new File(dir(table + "__data")),
-        java.util.UUID.randomUUID().toString)
-      out.write.mode("errorifexists").parquet(staged.getPath)
-      val (lo, hi) = casStatsOf(spark.read.parquet(staged.getPath), c)
-      if (casTryCommit(table, head + 1,
-        Seq(s"REPLACES $lo $hi ${staged.getPath}"))) return head + 1
-      delete(staged) // stale loser output, recomputed on retry
-      attempt += 1
-    }
-    throw new CommitConflict(
-      s"casReplaceStats($table): lost $retries CAS races")
   }
 
   // ---- row-level deletes (right-to-be-forgotten) -------------------
@@ -4167,23 +3822,6 @@ final case class Warehouse(root: String,
   def catVersionAsOf(ts: Long): Int =
     versionAsOfIn(catLogDir, catHead, ts, s"catVersionAsOf($ts)")
 
-  /** TIMESTAMP TIME TRAVEL over the CATALOG — the cross-table pin map
-    * as of an instant: "what did the whole warehouse look like at
-    * 14:05?" answered consistently for every table at once, because
-    * the resolved snapshot is one atomic catalog commit's pin set.
-    * Resolving below catalog retention fails loudly ([[catSnapshot]]
-    * on a truncated window), same as dead pins.
-    */
-  def catSnapshotAt(ts: Long): Map[String, Int] =
-    catSnapshot(catVersionAsOf(ts))
-
-  /** [[catRead]] addressed by timestamp: `table` at the version the
-    * catalog pinned as of instant `ts`.
-    */
-  def catReadAsOf(spark: SparkSession, table: String,
-      ts: Long): DataFrame =
-    catRead(spark, table, asOf = catVersionAsOf(ts))
-
   /** CATALOG LOG RETENTION — the [[casTruncate]] discipline one tier
     * up: write a fresh [[catCheckpoint]] (it carries the complete
     * resolved pin map), then delete every catalog commit strictly
@@ -4581,29 +4219,6 @@ final case class Warehouse(root: String,
   def readVersion(spark: SparkSession, table: String, v: Int): DataFrame =
     spark.read.parquet(dir(s"$table@v$v"))
 
-  def readLatest(spark: SparkSession, table: String): DataFrame =
-    readVersion(spark, table, latestVersion(table).getOrElse(
-      sys.error(s"no versions of $table under $root")))
-
-  /** Snapshot retention — drop all but the newest `keep` versions
-    * (the vacuum every versioned store eventually needs, or time
-    * travel becomes unbounded storage). Never touches the newest
-    * `keep`; `keep >= 1` makes deleting the only snapshot impossible
-    * by construction. Returns the dropped version numbers; version
-    * ALLOCATION stays monotone afterwards because [[writeVersion]]
-    * numbers from the surviving maximum.
-    */
-  def vacuumVersions(table: String, keep: Int): Seq[Int] = {
-    require(keep >= 1, s"vacuum must keep at least one version: $keep")
-    val prefix = s"$table@v"
-    val vs = Option(new File(root).listFiles()).getOrElse(Array.empty)
-      .map(_.getName).filter(_.startsWith(prefix))
-      .flatMap(_.stripPrefix(prefix).toIntOption).sorted
-    val dropped = vs.dropRight(keep)
-    dropped.foreach(v => delete(new File(dir(s"$table@v$v"))))
-    dropped.toSeq
-  }
-
   private def delete(f: File): Unit = {
     if (f.isDirectory) {
       val children = f.listFiles()
@@ -4883,11 +4498,10 @@ object Warehouse {
     * the NOT NULL violation throws before the nk != n comparison runs,
     * so no null-keyed row ever reaches the uniqueness count.
     *
-    * Its callers are the WAP audit ([[Warehouse.wapAudit]]), which
-    * checks a staged wave before anything publishes it, and the serial
-    * [[graft.etl.Pipeline.runDaily]]. The catalog-tier refresh
-    * ([[graft.etl.Pipeline.runDailyCat]]) runs the same gate inside
-    * each ODS table's write instead ([[constraintGate]]).
+    * Its caller is the WAP audit ([[Warehouse.wapAudit]]), which
+    * checks a staged wave before anything publishes it. The daily
+    * refresh ([[graft.etl.Pipeline.runDailyCat]]) runs the same checks
+    * inside each ODS table's write instead ([[constraintGate]]).
     */
   def checkConstraints(df: DataFrame, table: String, keys: Seq[String],
       notNull: Seq[String] = Nil): DataFrame = {

@@ -340,10 +340,10 @@ object StreamingEtl {
     * sequence/lamport stamp), NOT arrival order — a replayed batch
     * then resolves identically, which also makes checkpoint recovery
     * safe: re-appended duplicate (key, ver) rows are collapsed by
-    * the max-struct resolution. Compaction
-    * ([[graft.sources.Warehouse.compactDv]]-style folding via
-    * `mergeOverwrite` of the resolved read) amortizes the sidecar
-    * when it grows.
+    * the max-struct resolution. Compaction (a
+    * [[graft.sources.Warehouse.mergeOverwrite]] of the resolved
+    * [[graft.sources.Warehouse.readMorUpsert]] read) amortizes the
+    * sidecar when it grows.
     */
   def upsertSink(src: DataFrame, wh: graft.sources.Warehouse,
       table: String, checkpointDir: String): StreamingQuery =
@@ -693,7 +693,7 @@ object StreamingEtl {
     * store appends made while the stream runs are NOT picked up, and
     * a compaction's renames would break the pinned listing outright.
     * The operational contract is therefore: run store maintenance
-    * (append admitted fps, compact) BETWEEN stream runs and restart
+    * (append admitted fps) BETWEEN stream runs and restart
     * the query with a freshly-built `storeFps` — which is the same
     * fold-into-store cycle the dedup state already requires (below).
     *
@@ -705,8 +705,7 @@ object StreamingEtl {
     * deployment either bounds it with `withWatermark` + horizon dedup
     * (the [[dedupStream]] contract) or periodically folds admitted
     * fps into the store and restarts the stream with fresh state,
-    * which is exactly the append-then-compact maintenance cycle the
-    * store already has.
+    * which is the same append cycle the store already has.
     */
   def fpStoreGateStream(arrivals: DataFrame, storeFps: DataFrame)
       : DataFrame =

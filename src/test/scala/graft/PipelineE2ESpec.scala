@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.etl.Pipeline
 import graft.sources.Warehouse
 
-/** End-to-end daily-refresh sequence test (SURVEY §5.2): run 1 loads,
+/** End-to-end daily-refresh sequence test (SURVEY §5.2), through
+  * [[Pipeline.runDailyCat]] and read back through the catalog: run 1 loads,
   * run 2 carries an SCD1 change, an SCD2 change, and a new order —
   * asserting SCD1 overwrote, SCD2 expired+versioned, CDC facts
   * appended only the delta, dims refreshed; and a third identical run
@@ -15,53 +16,16 @@ import graft.sources.Warehouse
 class PipelineE2ESpec extends SparkSpec {
   import spark.implicits._
 
-  private def customers(last10: String) = Seq(
-    (10L, "Laraine@%", last10, "F", "12-10-1953", "IT", "Mass", "N"),
-    (11L, "Eli#", "Bockman##", "M", "01-01-1990", "IT", "Mass", "N"))
-    .toDF("customer_id", "first_name", "last_name", "gender", "DOB",
-      "job_industry_category", "wealth_segment", "deceased_indicator")
-
   private def inputs(last10: String, priceBX: Long,
-      extraOrder: Boolean): Pipeline.Inputs = {
-    val orders = Seq(
-      (100L, "AMER", 50L, "Online", 1L, "01-03-2019", 4L, 10L),
-      (101L, "EMEA", 70L, "Offline", 2L, "01-03-2019", 5L, 11L),
-      (102L, "APJ", 30L, "Online", 1L, "02-03-2019", 3L, 10L)) ++
-      (if (extraOrder)
-        Seq((103L, "AMER", 40L, "Online", 1L, "03-03-2019", 5L, 11L))
-      else Nil)
-    val items = Seq(
-      (1L, "BX-1001", 100L, 30L, 2L), (2L, "RO-2001", 100L, 20L, 1L),
-      (3L, "BX-1001", 101L, 70L, 3L), (4L, "RO-2001", 102L, 30L, 2L)) ++
-      (if (extraOrder) Seq((5L, "BX-1001", 103L, 40L, 1L)) else Nil)
-    Pipeline.Inputs(
-      customer = customers(last10),
-      address = Seq((1L, "Lyon", "France", "EMEA", 69000L))
-        .toDF("ADDRESSID", "CITY", "COUNTRY", "REGION", "POSTALCODE"),
-      businessPartner = Seq((7L, "a@b.c", 1L, "Acme"))
-        .toDF("PARTNERID", "EMAILADDRESS", "ADDRESSID", "COMPANYNAME"),
-      productCategory = Seq(("BX", "BMX"), ("RO", "Road"))
-        .toDF("PRODCATEGORYID", "PRODCATEGORYNAME"),
-      product = Seq(("BX-1001", "BX", 7L, priceBX),
-        ("RO-2001", "RO", 7L, 200L))
-        .toDF("PRODUCTID", "PRODCATEGORYID", "PARTNERID", "PRICE"),
-      productDetail = Seq(("BX-1001", "BMX Deluxe"),
-        ("RO-2001", "Road Racer"))
-        .toDF("PRODUCTID", "PRODUCT_NAME"),
-      store = Seq((1L, "Ann", 1L, "123"), (2L, "Bob", 1L, "456"))
-        .toDF("StoreID", "manager", "AddressID", "phone"),
-      salesOrder = orders.toDF("SalesOrderID", "SALESORG", "GROSSAMOUNT",
-        "Ordertype", "StoreID", "Date", "RATING", "customer_id"),
-      salesOrderItems = items.toDF("SalesOrderItemsID", "PRODUCTID",
-        "SalesOrderID", "GROSSAMOUNT", "QUANTITY"))
-  }
+      extraOrder: Boolean): Pipeline.Inputs =
+    BikesDays.inputs(spark, last10, priceBX, extraOrder)
 
   test("daily refresh ×3: SCD1 overwrite, SCD2 expire+version, CDC " +
     "delta-append, full-refresh dims, idempotent re-run") {
     val wh = Warehouse(Files.createTempDirectory("graft-e2e").toString)
-    def fct(n: String): DataFrame = wh.read(spark, n)
+    def fct(n: String): DataFrame = wh.catRead(spark, n)
 
-    Pipeline.runDaily(spark, wh, inputs("Medendorp@@", 100L,
+    Pipeline.runDailyCat(spark, wh, inputs("Medendorp@@", 100L,
       extraOrder = false), "2024-06-15")
     assert(fct("dw_ordr_sm_fct").count() == 3)
     assert(fct("dw_ordr_dtl_fct").count() == 4)
@@ -70,7 +34,7 @@ class PipelineE2ESpec extends SparkSpec {
       .getAs[String]("Cust_Lst_Nm") == "Medendorp")
 
     // run 2: last_name change (SCD1), BX price 100→120 (SCD2), order 103
-    Pipeline.runDaily(spark, wh, inputs("Smith", 120L,
+    Pipeline.runDailyCat(spark, wh, inputs("Smith", 120L,
       extraOrder = true), "2024-06-16")
     // SCD1: overwritten in place, still one row
     val c10 = fct("ods_customer").filter($"customer_id" === 10L)
@@ -98,33 +62,12 @@ class PipelineE2ESpec extends SparkSpec {
       .getAs[String]("Cust_Lst_Nm") == "Smith")
 
     // run 3: identical input → nothing moves
-    Pipeline.runDaily(spark, wh, inputs("Smith", 120L,
+    Pipeline.runDailyCat(spark, wh, inputs("Smith", 120L,
       extraOrder = true), "2024-06-17")
     assert(fct("dw_ordr_sm_fct").count() == 4)
     assert(fct("dw_ordr_dtl_fct").count() == 5)
     assert(fct("ods_product_hist").count() == 3)
     assert(fct("ods_product_hist").filter($"current_flag" === 1)
       .count() == 2)
-  }
-
-  test("dirty batch: a duplicate-key source fails the constraint gate " +
-    "and leaves the warehouse untouched") {
-    val wh = Warehouse(Files.createTempDirectory("graft-dirty").toString)
-    Pipeline.runDaily(spark, wh, inputs("Medendorp@@", 100L,
-      extraOrder = false), "2024-06-15")
-    val before = rows(wh.read(spark, "ods_address"))
-
-    // day 2 arrives with a duplicate ADDRESSID — the PK gate must stop
-    // the load BEFORE any merge corrupts the dimension
-    val dirty = inputs("Smith", 120L, extraOrder = true).copy(
-      address = Seq((1L, "Lyon", "France", "EMEA", 69000L),
-        (1L, "Paris", "France", "EMEA", 75000L))
-        .toDF("ADDRESSID", "CITY", "COUNTRY", "REGION", "POSTALCODE"))
-    val e = intercept[IllegalStateException] {
-      Pipeline.runDaily(spark, wh, dirty, "2024-06-16")
-    }
-    assert(e.getMessage.contains("ods_address") &&
-      e.getMessage.contains("duplicate"))
-    assert(rows(wh.read(spark, "ods_address")) == before)
   }
 }

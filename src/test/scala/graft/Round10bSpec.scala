@@ -771,9 +771,8 @@ class Round10bSpec extends SparkSpec {
   // ---- q223 merge-on-read deletion vectors
 
   test("deletion vectors: waves append without touching base files, " +
-    "MOR reads see each wave incrementally, duplicate deleted keys " +
-    "are harmless, compaction folds the vector in (and removes it), " +
-    "and re-applying a stale vector post-compaction is a no-op") {
+    "MOR reads see each wave incrementally, and duplicate or " +
+    "re-applied deleted keys are harmless") {
     import graft.sources.Warehouse
     import spark.implicits._
     val root = java.nio.file.Files
@@ -794,19 +793,12 @@ class Round10bSpec extends SparkSpec {
     // wave 2 overlaps wave 1 (2,3 again) — duplicates harmless
     wh.deleteKeys(Seq(2L, 3L, 4L, 5L).toDF("k"), "tb")
     assert(wh.readMor(spark, "tb", "k").count() == 95)
-    // compaction: fold in, vector gone, plain read == MOR
     val morRows = rows(wh.readMor(spark, "tb", "k"))
-    wh.compactDv(spark, "tb", "k")
-    assert(rows(wh.read(spark, "tb")) == morRows)
-    assert(!new java.io.File(s"$root/tb__dv").exists(),
-      "vector must be dropped after compaction")
-    // stale-vector idempotence: re-applying the folded keys removes
-    // nothing (the crash-window argument for deleting the vector
-    // OUTSIDE the swap)
+    // stale-vector idempotence: re-applying deleted keys removes
+    // nothing
     wh.deleteKeys(Seq(1L, 2L, 3L, 4L, 5L).toDF("k"), "tb")
     assert(rows(wh.readMor(spark, "tb", "k")) == morRows)
-    wh.compactDv(spark, "tb", "k")
-    // the store keeps working: a fresh delete after two compactions
+    // the store keeps working: a fresh delete after the re-applied one
     wh.deleteKeys(Seq(10L).toDF("k"), "tb")
     assert(wh.readMor(spark, "tb", "k").count() == 94)
   }
@@ -846,7 +838,7 @@ class Round10bSpec extends SparkSpec {
   // ---- q225 time travel
 
   test("time travel: v1 re-reads bit-exact AFTER v2 lands " +
-    "(immutability), readLatest resolves to the max version, " +
+    "(immutability), the latest version resolves to the max, " +
     "version numbers allocate densely, and writing never touches " +
     "older snapshot directories") {
     import graft.sources.Warehouse
@@ -865,36 +857,8 @@ class Round10bSpec extends SparkSpec {
       .map(f => f.getName -> f.lastModified()).toMap
     assert(files1b == files1, "writing v2 must not touch v1's files")
     assert(wh.latestVersion("tt").contains(2))
-    assert(rows(wh.readLatest(spark, "tt")) ==
+    assert(rows(wh.readVersion(spark, "tt", wh.latestVersion("tt").get)) ==
       Set(Seq[Any](1L, 11L)))
-  }
-
-  // ---- snapshot retention
-
-  test("vacuumVersions: drops exactly the oldest beyond keep, " +
-    "survivors stay readable, allocation continues from the " +
-    "surviving max, keep >= 1 is enforced, and a sparse version " +
-    "set (after a prior vacuum) handles correctly") {
-    import graft.sources.Warehouse
-    import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-vac").toString
-    val wh = Warehouse(root)
-    (1 to 4).foreach(i =>
-      wh.writeVersion(Seq((i.toLong, i.toLong)).toDF("k", "x"), "tv"))
-    assert(wh.vacuumVersions("tv", keep = 2) == Seq(1, 2))
-    assert(wh.latestVersion("tv").contains(4))
-    assert(rows(wh.readVersion(spark, "tv", 3)) ==
-      Set(Seq[Any](3L, 3L)))
-    assert(!new java.io.File(s"$root/tv@v1").exists())
-    // allocation continues past the surviving max
-    assert(wh.writeVersion(Seq((9L, 9L)).toDF("k", "x"), "tv") == 5)
-    // sparse set: drop down to one survivor
-    assert(wh.vacuumVersions("tv", keep = 1) == Seq(3, 4))
-    assert(rows(wh.readLatest(spark, "tv")) == Set(Seq[Any](9L, 9L)))
-    intercept[IllegalArgumentException] {
-      wh.vacuumVersions("tv", keep = 0)
-    }
   }
 
   // ---- q229 DQ expectations
@@ -978,28 +942,6 @@ class Round10bSpec extends SparkSpec {
     assert(!got.contains("s1"), "emptied group must drop")
     assert(got("s2") == ((1L, 7L, 49L)), "untouched group unchanged")
     assert(got("s3") == ((1L, 5L, 25L)), "insert mints a new group")
-  }
-
-  test("compactDv after a crashed swap: with the base moved aside " +
-    "(the mid-swap window) and the vector still present, a re-run " +
-    "recovers the base first, completes the compaction, and loses " +
-    "nothing") {
-    import graft.sources.Warehouse
-    import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-dvcrash").toString
-    val wh = Warehouse(root)
-    wh.overwrite((0L until 10L).map(i => (i, s"v$i")).toDF("k", "v"),
-      "tc")
-    wh.deleteKeys(Seq(1L, 2L).toDF("k"), "tc")
-    // simulate the crash window: live moved to .old, tmp never landed
-    assert(new java.io.File(s"$root/tc")
-      .renameTo(new java.io.File(s"$root/tc.old")))
-    wh.compactDv(spark, "tc", "k")
-    assert(!new java.io.File(s"$root/tc__dv").exists())
-    assert(rows(wh.read(spark, "tc")) ==
-      (0L until 10L).filterNot(Set(1L, 2L))
-        .map(i => Seq[Any](i, s"v$i")).toSet)
   }
 
   // ---- streaming upsert sink

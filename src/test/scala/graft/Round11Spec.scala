@@ -8,9 +8,6 @@ import graft.sources.Warehouse
   * mvhd too small for its version's layout is corrupt (None), and a
   * FOLLOWING SIBLING box inside moov must never donate the missing
   * bytes (the failure the moov-extent bound silently allowed).
-  * Second block: [[Warehouse.compactDv]] deletes only the vector
-  * files it snapshotted at entry, so a concurrent [[Warehouse
-  * .deleteKeys]] append landing mid-compaction is never lost.
   */
 class Round11Spec extends SparkSpec {
 
@@ -50,29 +47,5 @@ class Round11Spec extends SparkSpec {
     val moov = "00000020" + "6D6F6F76" +
       "00000008" + "6D766864" + freeHex
     assert(Multimodal.mp4Meta(hexBytes(ftypHex + moov)).isEmpty)
-  }
-
-  test("compactDv: a deleteKeys append landing after the entry " +
-    "snapshot (the scan-to-cleanup window) survives compaction — " +
-    "readMor still subtracts it, and the NEXT compaction folds it in") {
-    import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-dvwin").toString
-    val wh = Warehouse(root)
-    wh.overwrite((0L until 10L).map(i => (i, s"v$i")).toDF("k", "v"), "td")
-    wh.deleteKeys(Seq(1L).toDF("k"), "td")
-    // inject a concurrent delete into the snapshot-to-cleanup window
-    wh.compactDv(spark, "td", "k",
-      afterSnapshot = () => wh.deleteKeys(Seq(2L).toDF("k"), "td"))
-    val expect = (0L until 10L).filterNot(Set(1L, 2L))
-      .map(i => Seq[Any](i, s"v$i")).toSet
-    assert(rows(wh.readMor(spark, "td", "k")) == expect,
-      "the mid-window delete must still be visible to MOR reads")
-    assert(new java.io.File(s"$root/td__dv").exists(),
-      "the mid-window append's file must survive the snapshot delete")
-    wh.compactDv(spark, "td", "k")
-    assert(!new java.io.File(s"$root/td__dv").exists(),
-      "an undisturbed compaction clears the sidecar")
-    assert(rows(wh.read(spark, "td")) == expect)
   }
 }

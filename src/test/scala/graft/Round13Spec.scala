@@ -143,36 +143,6 @@ class Round13Spec extends SparkSpec {
     assert(wh.readPruned(spark, "t", "k", 100L, 350L).count() == 251L)
   }
 
-  test("two-level Bloom sidecar: group-level consult keeps the same " +
-    "files as the flat consult, pulls only surviving groups' rows, " +
-    "and readPointLookup matches the plain filter") {
-    import spark.implicits._
-    val wh = tmpWh()
-    // 16 files clustered by v (NOT k): range extents on k are useless,
-    // the Bloom sidecar is the only skip structure for k-equality
-    val df = (0L until 4000L).map(i => (i, i % 16)).toDF("k", "v")
-    wh.overwrite(df.repartition(16, col("v")), "t")
-    wh.writeBloomManifest(spark, "t", "k")
-    wh.writeTwoLevelBloomManifest(spark, "t", "k", groupSize = 4)
-    val key = 1234L
-    val (flat, nFiles) = wh.bloomPrunedFiles(spark, "t", "k", key)
-    val (kept, gTot, gKept, pulled) =
-      wh.bloomPrunedFilesTwoLevel(spark, "t", "k", key)
-    // hash-partitioning by v leaves some of the 16 partitions empty
-    // or zero-row (collisions), so don't pin 16: the sidecar has one
-    // row per file that holds rows
-    assert(nFiles >= 8 && gTot == (nFiles + 3) / 4)
-    assert(kept.toSet == flat.toSet,
-      "two levels must admit exactly the flat consult's files")
-    assert(pulled <= gKept * 4,
-      s"file rows pulled ($pulled) must be bounded by surviving groups")
-    val got = wh.readPointLookup(spark, "t", "k", key)
-      .as[(Long, Long)].collect().toSet
-    assert(got == Set((1234L, 1234L % 16)))
-    // absent key: proof of absence at whichever level prunes first
-    assert(wh.readPointLookup(spark, "t", "k", 999999L).count() == 0L)
-  }
-
   // ---- PNG pixel tier (r13 task 3) -------------------------------------
 
   // LSB-first bit writer for hand-encoding deflate test vectors
@@ -580,33 +550,6 @@ class Round13Spec extends SparkSpec {
     wh.casAppendBatch(Seq(1L).toDF("k2"), "t2", "s", 7L)
     wh.casCheckpoint("t2")
     assert(wh.casAppendBatch(Seq(1L).toDF("k2"), "t2", "s", 7L).isEmpty)
-  }
-
-  test("casReplaceStats: pruning keeps working after a replace — the " +
-    "REPLACES commit carries the new extent and skips like any wave") {
-    import spark.implicits._
-    val wh = tmpWh()
-    Seq((0L, 50L), (50L, 100L)).foreach { case (a, b) =>
-      wh.casAppendStats(spark,
-        (a until b).map(v => (v, v)).toDF("bucket", "payload"),
-        "t", "bucket")
-    }
-    // replace: keep bucket < 40 only — the new state's extent [0,39]
-    wh.casReplaceStats(spark, "t", "bucket")(_.filter(col("bucket") < 40L))
-    // a post-replace wave in [200, 225)
-    wh.casAppendStats(spark,
-      (200L until 225L).map(v => (v, v)).toDF("bucket", "payload"),
-      "t", "bucket")
-    // range above the replaced extent: the REPLACES commit is skipped
-    val (kept, total) = wh.casPrunedCommits("t", 150L, 300L)
-    assert(total == 2 && kept.size == 1,
-      s"the [0,39] replace snapshot must be skipped (kept ${kept.size})")
-    assert(wh.casReadPruned(spark, "t", "bucket", 150L, 300L)
-      .count() == 25L)
-    // range inside it: kept, and results equal the full filter
-    assert(wh.casReadPruned(spark, "t", "bucket", 10L, 20L)
-      .count() == 11L)
-    assert(wh.casRead(spark, "t").count() == 65L)
   }
 
   test("Adam7: interlaced and sequential encodings of the same " +

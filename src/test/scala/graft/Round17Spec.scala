@@ -220,7 +220,7 @@ class Round17Spec extends SparkSpec {
     assert(oc.size == 11)
   }
 
-  test("timestamp time travel: casReadAsOf/catSnapshotAt resolve by " +
+  test("timestamp time travel: casReadAsOf/catVersionAsOf resolve by " +
     "binary search over the injected monotone commit clock; a " +
     "backwards clock is clamped; resolving below retention or " +
     "before history fails loudly") {
@@ -250,10 +250,11 @@ class Round17Spec extends SparkSpec {
     wh.catCommit(Seq("tt" -> 1))
     now = 6000L
     wh.catCommit(Seq("tt" -> 3))
-    assert(wh.catSnapshotAt(5500L) == Map("tt" -> 1))
-    assert(rows(wh.catReadAsOf(spark, "tt", 5500L)) == Set(Vector(1L)))
-    assert(wh.catSnapshotAt(999999L) == Map("tt" -> 3))
-    intercept[RuntimeException](wh.catSnapshotAt(10L))
+    assert(wh.catSnapshot(wh.catVersionAsOf(5500L)) == Map("tt" -> 1))
+    assert(rows(wh.catRead(spark, "tt",
+      asOf = wh.catVersionAsOf(5500L))) == Set(Vector(1L)))
+    assert(wh.catSnapshot(wh.catVersionAsOf(999999L)) == Map("tt" -> 3))
+    intercept[RuntimeException](wh.catSnapshot(wh.catVersionAsOf(10L)))
     // retention interop: the resolved snapshot must exist
     now = 7000L
     wh.catTruncate()

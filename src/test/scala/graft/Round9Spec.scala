@@ -496,220 +496,4 @@ class Round9Spec extends SparkSpec {
     assert(rows(queries.Extras.q164.fn(spark, sf)) == expected,
       "BPE apply diverges from the independent encoder")
   }
-
-  private def parquetFiles(dir: String): Int =
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array())
-      .count(_.getName.endsWith(".parquet"))
-
-  test("compactBucketed: N appends then compact -> one file per " +
-    "bucket, rows identical, the same-bucketed join is still " +
-    "exchange-free, and equality reads stay bucket-pruned") {
-    import graft.sources.Warehouse
-    val root = java.nio.file.Files.createTempDirectory("graft-wh9")
-      .toString
-    val wh = Warehouse(root)
-    val base = (1 to 100).map(i => (i.toLong, i * 1.0)).toDF("k", "v")
-    wh.saveBucketed(base, "cb9_a", 4, Seq("k"))
-    (1 to 3).foreach { j =>
-      val delta = (1 to 50)
-        .map(i => ((j * 1000 + i).toLong, i * 2.0)).toDF("k", "v")
-      wh.appendBucketed(delta, "cb9_a", 4, Seq("k"))
-    }
-    val before = rows(spark.table("cb9_a"))
-    val filesBefore = parquetFiles(s"$root/cb9_a")
-    assert(filesBefore > 4,
-      s"appends should accrete files; saw $filesBefore")
-    try {
-      // a mismatched spec must refuse BEFORE touching anything — a
-      // wrong-modulus rewrite would silently corrupt bucketed reads
-      intercept[IllegalArgumentException] {
-        wh.compactBucketed(spark, "cb9_a", 8, Seq("k"))
-      }
-      intercept[IllegalArgumentException] {
-        wh.compactBucketed(spark, "cb9_a", 4, Seq("v"))
-      }
-      wh.compactBucketed(spark, "cb9_a", 4, Seq("k"))
-      assert(parquetFiles(s"$root/cb9_a") == 4,
-        "compaction must leave exactly one file per (nonempty) bucket")
-      assert(rows(spark.table("cb9_a")) == before,
-        "compaction changed the data")
-      // the bucket layout survived: a same-bucketed partner still
-      // joins with no exchange (cloned session, broadcast disabled)
-      val b = (1 to 200).map(i => (i.toLong, s"n$i")).toDF("k", "nb")
-      wh.saveBucketed(b, "cb9_b", 4, Seq("k"))
-      val clone = spark.newSession()
-      clone.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = clone.table("cb9_a").join(clone.table("cb9_b"),
-        Seq("k"))
-      assert(joined.count() == 100L,
-        "join row count off") // cb9_a keys 1..100 match cb9_b's 1..200
-      val jplan = joined.queryExecution.executedPlan.toString
-      assert(!jplan.contains("Exchange"),
-        s"bucketed join shuffled after compaction:\n$jplan")
-      // and equality filters still prune buckets on the compacted
-      // files (autoBucketedScan would drop the bucketed scan for a
-      // bare filter+count, hiding the pruning — pin it on in the
-      // clone, as a production read that exploits bucketing would)
-      clone.conf.set(
-        "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      val pruned = clone.table("cb9_a").filter($"k" === 42L)
-      val pplan = pruned.queryExecution.executedPlan.toString
-      val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
-        .findFirstMatchIn(pplan)
-      assert(sel.isDefined && sel.get.group(1).toInt == 1,
-        s"equality read not bucket-pruned after compaction:\n$pplan")
-      assert(pruned.count() == 1L)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS cb9_a")
-      spark.sql("DROP TABLE IF EXISTS cb9_b")
-      ()
-    }
-  }
-
-  test("compactPartitioned: per-partition rewrite — delta-accreted " +
-    "partitions collapse to their target file count, untouched " +
-    "partitions keep their exact files, rows identical, pruned reads " +
-    "intact") {
-    import graft.sources.Warehouse
-    val root = java.nio.file.Files.createTempDirectory("graft-whp9")
-      .toString
-    val wh = Warehouse(root)
-    // dt=a accretes 4 delta files; dt=b gets exactly one
-    (1 to 4).foreach { j =>
-      wh.appendPartitioned(
-        Seq((j.toLong, "a")).toDF("v", "dt").coalesce(1),
-        "pfact", Seq("dt"))
-    }
-    wh.appendPartitioned(Seq((99L, "b")).toDF("v", "dt").coalesce(1),
-      "pfact", Seq("dt"))
-    def files(part: String): Set[String] =
-      Option(new java.io.File(s"$root/pfact/dt=$part").listFiles())
-        .getOrElse(Array()).map(_.getName)
-        .filter(_.endsWith(".parquet")).toSet
-    val before = rows(spark.read.parquet(s"$root/pfact"))
-    assert(files("a").size == 4 && files("b").size == 1)
-    val bFilesBefore = files("b")
-    wh.compactPartitioned(spark, "pfact")
-    assert(files("a").size == 1,
-      "the accreted partition must collapse to one file")
-    assert(files("b") == bFilesBefore,
-      "an already-compact partition must not be rewritten")
-    assert(rows(spark.read.parquet(s"$root/pfact")) == before,
-      "compaction changed the data")
-    // partition pruning still works on the compacted layout
-    val pruned = spark.read.parquet(s"$root/pfact")
-      .filter($"dt" === "a")
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*dt[^\\]]*\\]".r
-      .findFirstIn(plan).isDefined, plan)
-    assert(pruned.count() == 4L)
-  }
-
-  test("compactPartitioned on a two-level hive layout: leaf " +
-    "partitions compact individually, the nested directory chain " +
-    "and both pruning levels survive") {
-    import graft.sources.Warehouse
-    val root = java.nio.file.Files.createTempDirectory("graft-whn9")
-      .toString
-    val wh = Warehouse(root)
-    (1 to 3).foreach { j =>
-      wh.appendPartitioned(
-        Seq((j.toLong, "a", 1L), (j.toLong, "b", 2L))
-          .toDF("v", "dt", "h").coalesce(1), "nfact", Seq("dt", "h"))
-    }
-    val before = rows(spark.read.parquet(s"$root/nfact"))
-    def files(p: String): Int =
-      Option(new java.io.File(s"$root/nfact/$p").listFiles())
-        .getOrElse(Array()).count(_.getName.endsWith(".parquet"))
-    assert(files("dt=a/h=1") == 3 && files("dt=b/h=2") == 3)
-    wh.compactPartitioned(spark, "nfact")
-    assert(files("dt=a/h=1") == 1 && files("dt=b/h=2") == 1,
-      "both leaf partitions must compact")
-    assert(rows(spark.read.parquet(s"$root/nfact")) == before)
-    val pruned = spark.read.parquet(s"$root/nfact")
-      .filter($"dt" === "a" && $"h" === 1L)
-    assert(pruned.count() == 3L)
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*dt[^\\]]*h[^\\]]*\\]".r
-      .findFirstIn(plan).isDefined ||
-      ("PartitionFilters: \\[[^\\]]*h[^\\]]*dt[^\\]]*\\]".r
-        .findFirstIn(plan).isDefined), plan)
-  }
-
-  test("compactPartitioned crash recovery: a partition caught in the " +
-    "swap window (moved aside, replacement not yet in place) is " +
-    "restored by the next call before any compaction runs") {
-    import graft.sources.Warehouse
-    val root = java.nio.file.Files.createTempDirectory("graft-whr9")
-      .toString
-    val wh = Warehouse(root)
-    (1 to 3).foreach { j =>
-      wh.appendPartitioned(
-        Seq((j.toLong, "a"), (j.toLong, "b")).toDF("v", "dt")
-          .coalesce(1), "rfact", Seq("dt"))
-    }
-    val before = rows(spark.read.parquet(s"$root/rfact"))
-    // simulate the crash: dt=a moved aside as the old copy, live dir
-    // gone, a half-written tmp left behind
-    val live = new java.io.File(s"$root/rfact/dt=a")
-    val old = new java.io.File(s"$root/rfact/_compact_old__dt=a")
-    assert(live.renameTo(old), "test setup: move partition aside")
-    val tmp = new java.io.File(s"$root/rfact/_compact_tmp__dt=a")
-    tmp.mkdirs()
-    new java.io.File(tmp, "part-junk.parquet").createNewFile()
-    // next compaction call must first restore dt=a and discard the tmp
-    wh.compactPartitioned(spark, "rfact")
-    assert(!old.exists() && !tmp.exists(),
-      "recovery must consume the old/tmp work dirs")
-    assert(rows(spark.read.parquet(s"$root/rfact")) == before,
-      "recovered table must hold the pre-crash rows")
-  }
-
-  test("compactBucketed on q140's incremental IVF-PQ store: the " +
-    "probe answers identically off the compacted files and stays " +
-    "bucket-pruned") {
-    val before = rows(queries.SimQueries.q140.fn(spark, sf))
-    val root = graft.SessionScratch.dir(spark, "ivfpqstore_inc")
-    val table = s"ivfpq_codes_inc_${graft.SessionScratch.keyOf(sf)}"
-    graft.sources.Warehouse(root)
-      .compactBucketed(spark, table, 8, Seq("cid"))
-    assert(parquetFiles(s"$root/$table") <= 8,
-      "compaction must leave at most one file per bucket")
-    // SessionScratch.once skips the rebuild — this plan READS the
-    // compacted store
-    val df = queries.SimQueries.q140.fn(spark, sf)
-    assert(rows(df) == before,
-      "probe result changed after store compaction")
-    val plan = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==").head
-    assert(plan.contains("SelectedBucketsCount"),
-      s"probe must stay bucket-pruned on the compacted store:\n$plan")
-  }
-
-  test("compactBucketed on the band store: candidate pairs are " +
-    "identical before and after, at one file per bucket") {
-    import graft.sources.{Tables, Warehouse}
-    import graft.text.SignatureStore
-    val root = java.nio.file.Files.createTempDirectory("graft-sig9")
-      .toString
-    val wh = Warehouse(root)
-    val docs = Tables(spark, sf, "documents")
-    try {
-      SignatureStore.writeBands(wh, docs.filter($"doc_id" % 3 === 0),
-        "sig9_bands", 4)
-      SignatureStore.appendBands(wh, docs.filter($"doc_id" % 3 === 1),
-        "sig9_bands", 4)
-      SignatureStore.appendBands(wh, docs.filter($"doc_id" % 3 === 2),
-        "sig9_bands", 4)
-      val before =
-        rows(SignatureStore.candidatesFromStore(spark, "sig9_bands", 20))
-      wh.compactBucketed(spark, "sig9_bands", 4, Seq("band", "key"))
-      assert(parquetFiles(s"$root/sig9_bands") == 4,
-        "band store not compacted to one file per bucket")
-      val after =
-        rows(SignatureStore.candidatesFromStore(spark, "sig9_bands", 20))
-      assert(after == before,
-        "compaction changed the candidate set")
-    } finally { spark.sql("DROP TABLE IF EXISTS sig9_bands"); () }
-  }
 }

@@ -83,14 +83,14 @@ class SourcesSpec extends SparkSpec {
     }
   }
 
-  test("appendPartitioned: date-filtered reads prune partitions " +
+  test("overwritePartitioned: date-filtered reads prune partitions " +
     "(PartitionFilters in the scan, not data filters)") {
     val root = Files.createTempDirectory("graft-wh2").toString
     val wh = Warehouse(root)
     val fact = Seq(
       ("2024-01-01", 1L, 10.0), ("2024-01-02", 2L, 20.0),
       ("2024-01-03", 3L, 30.0)).toDF("dt", "k", "v")
-    wh.appendPartitioned(fact, "fct", Seq("dt"))
+    wh.overwritePartitioned(fact, "fct", Seq("dt"))
     val filtered = wh.read(spark, "fct").filter($"dt" === "2024-01-02")
     assert(filtered.count() == 1)
     val plan = filtered.queryExecution.executedPlan.toString
@@ -190,71 +190,9 @@ class SourcesSpec extends SparkSpec {
       Set(Seq(1L, "a"), Seq(2L, "b")))
   }
 
-  test("Warehouse.compact: many small append files collapse to the " +
-    "size-targeted count, rows identical, no shuffle in the rewrite") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-compact").toString
-    val wh = sources.Warehouse(root)
-    // 20 tiny appends → ≥ 20 files (one+ per append)
-    (1 to 20).foreach { i =>
-      wh.append(Seq((i.toLong, s"row$i")).toDF("k", "v"), "t")
-    }
-    def files() = new java.io.File(s"$root/t").listFiles()
-      .count(f => f.getName.endsWith(".parquet"))
-    val before = rows(wh.read(spark, "t"))
-    assert(files() >= 20)
-    // no-shuffle claim: the compaction plan is coalesce, not repartition
-    val plan = wh.read(spark, "t").coalesce(1)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), plan)
-    wh.compact(spark, "t", targetFileBytes = 1L << 30)
-    assert(files() == 1, s"expected 1 compacted file, got ${files()}")
-    assert(rows(wh.read(spark, "t")) == before)
-    // a second compact is a no-op in content and file count
-    wh.compact(spark, "t", targetFileBytes = 1L << 30)
-    assert(files() == 1 && rows(wh.read(spark, "t")) == before)
-    // a hive-partitioned table must be refused, not silently flattened
-    wh.appendPartitioned(Seq((1L, "2024")).toDF("k", "y"), "pt", Seq("y"))
-    val e = intercept[IllegalArgumentException] { wh.compact(spark, "pt") }
-    assert(e.getMessage.contains("partition"))
-  }
-
-  test("compactBucketed crash safety, pre-swap: a crash during the " +
-    "tmp write leaves the live table untouched — reads stay on the " +
-    "old fileset and a re-run completes cleanly") {
-    val root = Files.createTempDirectory("graft-cbc1").toString
-    val wh = Warehouse(root)
-    val base = (1 to 60).map(i => (i.toLong, i * 1.0)).toDF("k", "v")
-    try {
-      wh.saveBucketed(base, "cbc1", 4, Seq("k"))
-      (1 to 2).foreach { j =>
-        wh.appendBucketed((1 to 30).map(i => ((j * 100 + i).toLong,
-          i * 2.0)).toDF("k", "v"), "cbc1", 4, Seq("k"))
-      }
-      val before = rows(spark.table("cbc1"))
-      // simulate the crash: a half-written tmp dir exists, live intact
-      val tmp = new java.io.File(s"$root/cbc1.tmp")
-      tmp.mkdirs()
-      java.nio.file.Files.write(
-        new java.io.File(tmp, "part-halfwritten.parquet").toPath,
-        Array[Byte](1, 2, 3))
-      // reads see the live fileset, unaffected by the orphan tmp
-      assert(rows(wh.read(spark, "cbc1")) == before)
-      // the re-run discards the orphan and completes
-      wh.compactBucketed(spark, "cbc1", 4, Seq("k"))
-      assert(!tmp.exists(), "re-run must consume the orphan tmp")
-      assert(rows(spark.table("cbc1")) == before)
-      val files = Option(new java.io.File(s"$root/cbc1").listFiles())
-        .getOrElse(Array()).count(_.getName.endsWith(".parquet"))
-      assert(files == 4, s"expected one file per bucket, got $files")
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS cbc1"); ()
-    }
-  }
-
-  test("compactBucketed crash safety, mid-swap: live moved aside and " +
-    "the replacement not yet in place — recovery restores the last " +
-    "complete copy and a re-run completes with the bucket spec intact") {
+  test("recover after a crash mid-swap: live moved aside and the " +
+    "replacement not yet in place — recovery restores the last " +
+    "complete copy of a bucketed table to its catalog path") {
     val root = Files.createTempDirectory("graft-cbc2").toString
     val wh = Warehouse(root)
     try {
@@ -264,15 +202,15 @@ class SourcesSpec extends SparkSpec {
         .toDF("k", "v"), "cbc2", 4, Seq("k"))
       val before = rows(spark.table("cbc2"))
       // simulate the crash INSIDE the swap window: live renamed aside,
-      // tmp (the finished compacted copy in a real crash; junk here,
-      // which recovery must discard unread) never moved in
+      // tmp (the finished copy in a real crash; junk here, which
+      // recovery must not read) never moved in
       val live = new java.io.File(s"$root/cbc2")
       val old = new java.io.File(s"$root/cbc2.old")
       assert(live.renameTo(old), "test setup: move live aside")
       val tmp = new java.io.File(s"$root/cbc2.tmp")
       tmp.mkdirs()
       new java.io.File(tmp, "part-junk.parquet").createNewFile()
-      // recover (run on entry by every store op) restores the last
+      // recover (run on entry by mergeOverwrite) restores the last
       // complete copy; the catalog entry's path is unchanged
       wh.recover("cbc2")
       spark.catalog.refreshTable("cbc2")
@@ -280,14 +218,6 @@ class SourcesSpec extends SparkSpec {
         "recovery must restore the old copy to the live path")
       assert(rows(spark.table("cbc2")) == before,
         "recovered table must hold the pre-crash rows")
-      // the re-run completes: one file per bucket, rows identical,
-      // and the crash-junk tmp was discarded, never read
-      wh.compactBucketed(spark, "cbc2", 4, Seq("k"))
-      assert(rows(spark.table("cbc2")) == before)
-      val files = Option(live.listFiles()).getOrElse(Array())
-        .count(_.getName.endsWith(".parquet"))
-      assert(files == 4, s"expected one file per bucket, got $files")
-      assert(!tmp.exists() && !old.exists())
     } finally {
       spark.sql("DROP TABLE IF EXISTS cbc2"); ()
     }

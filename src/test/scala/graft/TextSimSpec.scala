@@ -134,6 +134,29 @@ class TextSimSpec extends SparkSpec {
     Materialized.clear(spark)
   }
 
+  test("SessionScratch.once: a write may call once for other keys — " +
+    "each of 2,000 nested keys writes exactly once, whichever keys " +
+    "share a map bin") {
+    // more nested keys than the scratch map has bins, so some share
+    // one; its own thread, for the stack the nesting needs
+    val base = s"nest-${java.util.UUID.randomUUID()}"
+    val depth = 2000
+    val writes = new java.util.concurrent.atomic.AtomicInteger
+    def nest(i: Int): Unit = SessionScratch.once(spark, s"$base:$i") {
+      writes.incrementAndGet()
+      if (i < depth) nest(i + 1)
+    }
+    var failure: Option[Throwable] = None
+    val t = new Thread(null, () =>
+      try { nest(0); nest(0) }
+      catch { case e: Throwable => failure = Some(e) },
+      "scratch-nest", 64L << 20)
+    t.start()
+    t.join()
+    assert(failure.isEmpty, s"nested once failed: $failure")
+    assert(writes.get() == depth + 1)
+  }
+
   test("multimodal byteSumFeatures: deterministic features and frames") {
     import graft.multimodal.Multimodal
     val payload = "abcdabcd".getBytes("UTF-8")
